@@ -5,7 +5,7 @@ capabilities of the reference repo ``hasb73/hdfs-anomaly-detection``:
 declarative constraint DSL compiled to Catalyst predicates, per-column
 stats (null-rate, min/max, HLL distinct, length histograms), salted
 uniqueness, referential integrity via broadcast / sort-merge joins,
-distribution-drift checks (KS / PSI over mergeable t-digest sketches),
+distribution-drift checks (KS / PSI over mergeable log-bucket histograms),
 per-partition pass/fail verdicts with exact violation rows, and a
 manifest-table checkpoint for idempotent resume.
 

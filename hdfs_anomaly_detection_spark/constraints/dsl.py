@@ -186,8 +186,9 @@ class TextEquals(Check):
 
 @dataclass(frozen=True)
 class Drift(Check):
-    """Distribution drift of a numeric metric vs a baseline t-digest,
-    scored per-partition with KS and PSI (runner-planned, sketch-based).
+    """Distribution drift of a numeric metric vs a baseline bucket
+    histogram (``sketch.drift``), scored per-partition with KS and PSI
+    (runner-planned, sketch-based).
 
     metric: 'text_length' | 'turn_count' | any numeric column name.
     Reference analogue: percentile rarity thresholds
@@ -270,7 +271,7 @@ def validated_columns(checks: list[Check]) -> set[str]:
     ``SchemaConformance`` reads the schema, not row content, so it
     contributes nothing; ``Drift`` derived metrics map to their source
     column (``text_length`` → text; ``turn_count`` groups rows by
-    conv_id — ``sketch.tdigest.metric_frame`` — so a conv_id
+    conv_id — ``sketch.drift.metric_frame`` — so a conv_id
     re-assignment changes the distribution and conv_id is its read
     set)."""
     cols: set[str] = set()

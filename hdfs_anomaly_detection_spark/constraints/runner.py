@@ -13,7 +13,7 @@ Plan shape (scale rationale):
   free). No per-check scans.
 * The narrow flagged frame is hash-repartitioned once on the cluster key
   (conv_id); the reference-equality SMJ, dim joins, ordering windows,
-  uniqueness counts, per-partition row counts AND drift-metric digests
+  uniqueness counts, per-partition row counts AND drift-metric histograms
   all ride that single exchange (subset co-partitioning) — in the
   clustered plan the fact table is scanned exactly once per run, with
   the persisted narrow frame (~50 B/row) feeding every output.
@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -103,7 +104,7 @@ class ValidationRunner:
         n_buckets: int = 32,
         dims: dict[str, DataFrame] | None = None,
         reference: DataFrame | None = None,
-        baselines: dict[str, list] | None = None,
+        baselines: dict[str, pd.DataFrame] | None = None,
         part_col: str | None = None,
         cluster_key: str | None = "conv_id",
         carry_cols: tuple[str, ...] = (),
@@ -460,13 +461,13 @@ class ValidationRunner:
           (MEMORY_AND_DISK; ~50 B/row). Row violations (explode),
           uniqueness counts (partition-local — the frame is already
           hash-partitioned on the cluster key), per-partition row
-          counts, drift-metric digests and freshness max-ts aggregates
+          counts, drift-metric histograms and freshness max-ts aggregates
           (when ts rides the frame) are all derived from it: the fact
           table is scanned exactly once per run.
         * unclustered plan: the (much smaller) violations frame is
           persisted and uniqueness/row counts re-scan fact with pruned
           columns; a Drift check still forces the narrow-frame cache so
-          digests never re-read the wide table.
+          histograms never re-read the wide table.
 
         The persisted intermediate is returned as ``result.cached`` —
         call ``result.unpersist()`` once both outputs are materialized."""
@@ -478,7 +479,7 @@ class ValidationRunner:
         # pays when it is cached — otherwise they would recompute the
         # whole expensive scan and the pruned fact scans are cheaper.
         # Drift metrics riding the narrow frame (self._drift_cols) make
-        # the cache worthwhile even without clustering: the digest pass
+        # the cache worthwhile even without clustering: the histogram pass
         # then reads ~8 B/row from cache instead of re-scanning fact.
         reuse = persist and (
             getattr(self, "_clustered", False) or bool(self._drift_cols)
@@ -588,7 +589,7 @@ class ValidationRunner:
         if drift_checks and self.baselines:
             from hdfs_anomaly_detection_spark.sketch.drift import drift_verdicts
 
-            # feed the digests from the persisted narrow frame (the
+            # feed the histograms from the persisted narrow frame (the
             # metric was pre-computed map-side as one double column):
             # Drift adds ZERO extra fact scans to the clustered plan
             metric_frames: dict[str, DataFrame] | None = None
@@ -599,19 +600,20 @@ class ValidationRunner:
                     if src == "turn_count":
                         metric_frames[chk.metric] = (
                             flagged.groupBy("part_id", "conv_id")
-                            .agg(F.count(F.lit(1)).cast("double").alias("value"))
+                            .agg(F.count(F.lit(1)).alias("value"))
                             .select("part_id", "value")
                         )
                     elif src is not None:
                         metric_frames[chk.metric] = flagged.select(
                             "part_id", F.col(src).alias("value")
-                        ).filter(F.col("value").isNotNull())
+                        )
             dv = drift_verdicts(
                 fact,
                 drift_checks,
                 self.baselines,
                 n_buckets=self.n_buckets,
                 metric_frames=metric_frames,
+                part_col=self.part_col,
             )
             verdicts = verdicts.unionByName(dv)
 

@@ -1,8 +1,3 @@
-from hdfs_anomaly_detection_spark.sketch.tdigest import (  # noqa: F401
-    TDigest,
-    build_partition_digests,
-    metric_frame,
-)
 from hdfs_anomaly_detection_spark.sketch.cms import (  # noqa: F401
     CountMinSketch,
     build_cms,
@@ -10,8 +5,10 @@ from hdfs_anomaly_detection_spark.sketch.cms import (  # noqa: F401
     heavy_hitters,
 )
 from hdfs_anomaly_detection_spark.sketch.drift import (  # noqa: F401
+    compute_baselines,
     drift_verdicts,
     exact_ks_by_group,
     ks_statistic,
+    metric_frame,
     psi,
 )

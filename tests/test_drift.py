@@ -1,64 +1,120 @@
-"""t-digest sketch accuracy + KS/PSI drift detection, end to end."""
+"""Log-bucket drift sketch: bucket keys, merge, KS/PSI accuracy against
+exact statistics, and drift detection end to end."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.constraints import ValidationRunner, Drift
 from hdfs_anomaly_detection_spark.fixtures import FixtureConfig, clean_transcripts
-from hdfs_anomaly_detection_spark.sketch import TDigest, build_partition_digests, metric_frame
-from hdfs_anomaly_detection_spark.sketch.drift import compute_baselines, ks_statistic, psi
+from hdfs_anomaly_detection_spark.sketch.drift import (
+    EXACT_BELOW,
+    GAMMA,
+    bucket_key,
+    compute_baselines,
+    histogram,
+    histogram_table,
+    ks_statistic,
+    metric_frame,
+    psi,
+)
 
 
-def test_tdigest_quantiles_uniform():
-    rng = np.random.default_rng(42)
-    vals = rng.uniform(0, 1, 50_000)
-    d = TDigest.from_values(vals)
-    qs = np.array([0.01, 0.25, 0.5, 0.75, 0.99])
-    est = d.quantile(qs)
-    exact = np.quantile(vals, qs)
-    assert np.max(np.abs(est - exact)) < 0.01
-    assert len(d.means) < 250  # compression bound ~2*delta
+def _hists(spark, samples: list[np.ndarray]) -> list:
+    """Bucket histograms of each sample, built by the Spark path (sample
+    i is part_id i)."""
+    pdf = pd.DataFrame(
+        {
+            "part_id": np.concatenate([np.full(len(x), i) for i, x in enumerate(samples)]),
+            "value": np.concatenate(samples).astype(float),
+        }
+    )
+    tbl = histogram_table({"m": spark.createDataFrame(pdf)})
+    parts = [tbl[tbl["part_id"] == i] for i in range(len(samples))]
+    return [histogram(t["bucket"], t["n"]) for t in parts]
 
 
-def test_tdigest_merge_equals_whole():
+def test_bucket_keys_monotone_exact_and_relative(spark):
+    vals = np.array(
+        [0.0, -0.0, 1, 2, 2.5, 2.99, 3, 7, 0.001, 0.5, 0.999, 1e-300, 4095, 4095.5,
+         4096, 4097, 1e6 + 0.5, 1e300]
+    )
+    vals = np.sort(np.concatenate([vals, -vals]))
+    pdf = pd.DataFrame({"v": vals})
+    keys = np.array(
+        [r[0] for r in spark.createDataFrame(pdf).select(bucket_key(F.col("v"))).collect()]
+    )
+    # monotone in v, so every bucket is an interval of values
+    assert np.all(np.diff(keys) >= 0)
+    ints = (vals == np.floor(vals)) & (np.abs(vals) < EXACT_BELOW)
+    assert np.array_equal(keys[ints], vals[ints])
+    # the bare log bucket of 2.99 would pass the exact bucket of 3
+    assert keys[vals == 2.99][0] <= 3.0
+    nz = vals != 0
+    assert np.all(np.abs(keys[nz] - vals[nz]) <= (GAMMA - 1) * np.abs(vals[nz]) * (1 + 1e-9))
+
+
+def test_bucket_merge_equals_whole(spark):
     rng = np.random.default_rng(7)
     vals = rng.lognormal(3, 1, 40_000)
-    parts = [TDigest.from_values(v) for v in np.array_split(vals, 8)]
-    merged = TDigest.merge_all(parts)
-    whole = TDigest.from_values(vals)
-    qs = np.linspace(0.05, 0.95, 19)
-    rel = np.abs(merged.quantile(qs) - whole.quantile(qs)) / whole.quantile(qs)
-    assert np.max(rel) < 0.05
-    assert merged.n == len(vals)
+    parts = np.array_split(vals, 8)
+    hs = _hists(spark, parts + [vals])
+    merged = histogram(
+        np.concatenate([k for k, _ in hs[:8]]), np.concatenate([n for _, n in hs[:8]])
+    )
+    whole = hs[8]
+    assert np.array_equal(merged[0], whole[0]) and np.array_equal(merged[1], whole[1])
+    assert merged[1].sum() == len(vals)
+    # bounded by the log buckets over max/min plus the integer buckets
+    # below the cutoff, regardless of row count
+    log_buckets = np.log(vals.max() / vals.min()) / np.log(GAMMA) + 2
+    assert len(whole[0]) <= log_buckets + min(vals.max(), EXACT_BELOW)
 
 
-def test_ks_and_psi_sensitivity():
+def test_ks_and_psi_sensitivity(spark):
     rng = np.random.default_rng(0)
-    a = TDigest.from_values(rng.normal(0, 1, 30_000))
-    b = TDigest.from_values(rng.normal(0, 1, 30_000))
-    c = TDigest.from_values(rng.normal(1.0, 1, 30_000))
+    a, b, c = _hists(
+        spark,
+        [rng.normal(0, 1, 30_000), rng.normal(0, 1, 30_000), rng.normal(1.0, 1, 30_000)],
+    )
     assert ks_statistic(a, b) < 0.03
     assert ks_statistic(a, c) > 0.3
     assert psi(a, b) < 0.02
     assert psi(a, c) > 0.5
 
 
+def test_bucket_ks_error_bound_on_continuous_column(spark):
+    """On a continuous column, 0 <= KS_exact - KS_bucketed <= the largest
+    single-bucket mass of either sample (the bound stated in
+    ``ks_statistic``'s docstring)."""
+    rng = np.random.default_rng(5)
+    a = rng.normal(100, 15, 30_000)
+    b = rng.normal(103, 16, 30_000)
+    ha, hb = _hists(spark, [a, b])
+    exact = _np_ks(a, b)
+    approx = ks_statistic(ha, hb)
+    bound = max(ha[1].max() / len(a), hb[1].max() / len(b))
+    assert -1e-12 <= exact - approx <= bound + 1e-12
+
+
 def test_partition_digests_match_exact_quantiles(spark):
     cfg = FixtureConfig(n_conversations=300)
     fact = clean_transcripts(spark, cfg)
     mf = metric_frame(fact, "text_length", n_buckets=4)
-    digests = build_partition_digests(mf, "text_length").toPandas()
-    assert set(digests["part_id"]) == set(range(4))
+    tbl = histogram_table({"text_length": mf})
+    assert set(tbl["part_id"]) == set(range(4))
     pdf = mf.toPandas()
-    for _, r in digests.iterrows():
-        d = TDigest(np.asarray(r["means"]), np.asarray(r["weights"]), int(r["n"]),
-                    float(r["vmin"]), float(r["vmax"]))
-        vals = pdf[pdf["part_id"] == r["part_id"]]["value"].to_numpy()
-        assert d.n == len(vals)
-        est = d.quantile(np.array([0.5]))[0]
-        assert abs(est - np.quantile(vals, 0.5)) / np.quantile(vals, 0.5) < 0.1
+    for pid, g in tbl.groupby("part_id"):
+        keys, counts = histogram(g["bucket"], g["n"])
+        vals = pdf[pdf["part_id"] == pid]["value"].to_numpy()
+        # integer lengths below the cutoff: one exact bucket per length
+        want_keys, want_counts = np.unique(vals, return_counts=True)
+        assert np.array_equal(keys, want_keys) and np.array_equal(counts, want_counts)
+        median = keys[np.searchsorted(np.cumsum(counts), (counts.sum() + 1) // 2)]
+        assert median == np.quantile(vals, 0.5, method="lower")
 
 
 def test_drift_detected_end_to_end(spark):
@@ -123,6 +179,37 @@ def test_global_drift_on_subset_run_uses_baseline_slice(spark):
     res.unpersist()
 
 
+def test_partition_without_baseline_fails_and_stays_out_of_rollup(spark):
+    """A current partition with no baseline histogram gets a NaN/failed
+    row; the rolled-up -1 row compares only the matched partitions, and
+    every statistic equals the exact KS of the same partition set."""
+    from hdfs_anomaly_detection_spark.constraints.runner import part_id_expr
+    from hdfs_anomaly_detection_spark.sketch import exact_ks_by_group
+
+    pid = part_id_expr(n_buckets=8)
+    clean = clean_transcripts(spark, FixtureConfig(n_conversations=400))
+    drifted = clean_transcripts(spark, FixtureConfig(n_conversations=400, length_drift_factor=1.2))
+    baselines = compute_baselines(clean.filter(pid < 4), ["text_length"], n_buckets=8)
+    checks = [Drift("d", metric="text_length", method="ks", threshold=0.1)]
+    res = ValidationRunner(checks, n_buckets=8, baselines=baselines).run(drifted)
+    verd = res.verdicts.toPandas().set_index("part_id")
+    res.unpersist()
+    assert sorted(verd.index) == list(range(-1, 8))
+    unmatched = verd.loc[[4, 5, 6, 7]]
+    assert unmatched["statistic"].isna().all() and not unmatched["passed"].any()
+
+    def lengths(df):
+        per_part = df.select(pid.alias("g"), F.length("text").alias("v"))
+        return per_part.unionByName(per_part.filter("g < 4").withColumn("g", F.lit(-1)))
+
+    exact = exact_ks_by_group(lengths(clean), lengths(drifted), "v", ["g"]).toPandas()
+    exact = exact.set_index("g")["ks_stat"]
+    for g in (-1, 0, 1, 2, 3):
+        assert verd.loc[g, "statistic"] == pytest.approx(exact[g], abs=1e-6)
+    matched_rows = drifted.filter((pid < 4) & F.col("text").isNotNull()).count()
+    assert verd.loc[-1, "n_rows"] == matched_rows
+
+
 # --------------------------------------------------------- exact KS (r5)
 
 
@@ -175,20 +262,32 @@ def test_exact_ks_null_values_and_missing_groups(spark):
     assert out[0]["ks_stat"] == pytest.approx(0.5)
 
 
-def test_tdigest_ks_tracks_exact_ks(spark):
-    # the approximate (t-digest) path and the exact path must agree
-    # within sketch tolerance on the same data — binds
-    # v_drift_text_length to q_ks_exact
+def test_bucket_ks_equals_exact_ks_on_integers(spark):
+    # integer values below the cutoff get exact buckets: the bucketed KS
+    # IS the exact KS (binds v_drift_text_length to q_ks_exact)
     from hdfs_anomaly_detection_spark.sketch import exact_ks_by_group
 
     rng = np.random.default_rng(23)
     a = rng.lognormal(4.0, 0.6, 30_000).round(0)
     b = rng.lognormal(4.15, 0.65, 30_000).round(0)
+    assert max(a.max(), b.max()) < EXACT_BELOW
     exact = _np_ks(a, b)
-    approx = ks_statistic(TDigest.from_values(a), TDigest.from_values(b))
-    assert approx == pytest.approx(exact, abs=0.02)
+    ha, hb = _hists(spark, [a, b])
+    assert ks_statistic(ha, hb) == pytest.approx(exact, abs=1e-12)
     # and the distributed exact path agrees with numpy exactly
     base = spark.createDataFrame([(0, float(x)) for x in a], "grp int, v double")
     cur = spark.createDataFrame([(0, float(x)) for x in b], "grp int, v double")
     got = exact_ks_by_group(base, cur, "v", ["grp"]).collect()[0]["ks_stat"]
     assert got == pytest.approx(exact, abs=2e-6)
+
+
+def test_baselines_are_small_bucket_tables(spark):
+    cfg = FixtureConfig(n_conversations=200)
+    fact = clean_transcripts(spark, cfg)
+    baselines = compute_baselines(fact, ["text_length", "turn_count"], n_buckets=4)
+    assert sorted(baselines) == ["text_length", "turn_count"]
+    for m, tbl in baselines.items():
+        assert list(tbl.columns) == ["part_id", "bucket", "n"]
+        assert set(tbl["part_id"]) == set(range(4))
+    assert baselines["text_length"]["n"].sum() == fact.filter("text IS NOT NULL").count()
+    assert baselines["turn_count"]["n"].sum() == fact.select("conv_id").distinct().count()

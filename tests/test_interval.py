@@ -12,10 +12,6 @@ from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.operators import interval_join
 
-# several tests intentionally pass tiny bins to exercise wide-span
-# correctness; the amplification warning is expected there
-pytestmark = pytest.mark.filterwarnings("ignore:interval_join bin_size")
-
 SEED = 20260817
 
 
