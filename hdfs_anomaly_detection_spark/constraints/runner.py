@@ -11,15 +11,22 @@ Plan shape (scale rationale):
   into ONE flagged scan; violation rows come from exploding a compacted
   struct array (rows with no failures are dropped by ``explode`` for
   free). No per-check scans.
-* The narrow flagged frame is hash-repartitioned once on the cluster key
-  (conv_id); the reference-equality SMJ, dim joins, ordering windows,
-  uniqueness counts, per-partition row counts AND drift-metric histograms
-  all ride that single exchange (subset co-partitioning) — in the
-  clustered plan the fact table is scanned exactly once per run, with
-  the persisted narrow frame (~50 B/row) feeding every output.
-  Freshness also aggregates from the narrow frame when its ts column
-  rides it (true for the standard suite via MonotonicOrder's tiebreak);
-  otherwise it falls back to a pruned ts scan.
+* The plan for one input is a value (``FlagPlan``): the narrow flagged
+  frame, its flag columns, whether it is clustered and which columns
+  carry drift metrics. ``run`` derives every output from that value and
+  keeps no per-call state on the runner, so one runner can serve
+  concurrent callers (e.g. ``foreachBatch`` threads).
+* When a check needs conversation locality (ordering windows, reference
+  equality, referential joins) the narrow frame is hash-repartitioned
+  once on conv_id; the reference-equality SMJ, dim joins, ordering
+  windows, uniqueness counts, per-partition row counts AND drift-metric
+  histograms all ride that single exchange (subset co-partitioning).
+* One caching policy: every run persists the narrow frame
+  (MEMORY_AND_DISK, ~50 B/row) and nothing else. Row violations,
+  partition-local uniqueness, per-partition row counts, freshness max-ts
+  aggregates (every Freshness ``ts_col`` rides the frame) and drift
+  histograms all read it, so the fact table is scanned once per run;
+  only unclustered uniqueness re-reads the fact table.
 * Uniqueness without clustering runs as a salted two-phase aggregation
   (partial counts per input split → final merge), so a hot
   (conv_id, turn_idx) key never concentrates on one reducer; with
@@ -37,9 +44,12 @@ per-partition pass/fail mirrors its OK/WARNING/CRITICAL CASE thresholds
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -82,19 +92,26 @@ def reference_hashes(ref_df: DataFrame, chk) -> DataFrame:
     )
 
 
-@dataclass
+class FlagPlan(NamedTuple):
+    """The validation plan for one input, as an immutable value."""
+
+    frame: DataFrame  # the narrow flagged frame
+    flags: tuple[tuple[Check, str], ...]  # (check, flag column)
+    clustered: bool  # frame is hash-partitioned on conv_id
+    drift_cols: dict[str, str]  # drift check name → metric column
+
+
+@dataclass(frozen=True)
 class ValidationResult:
     violations: DataFrame  # VIOLATIONS_SCHEMA
     verdicts: DataFrame  # VERDICTS_SCHEMA
-    # the intermediate the runner persisted (narrow flagged frame or the
-    # violations frame); callers should ``unpersist()`` once both outputs
-    # are materialized so long-lived sessions don't accumulate cache
-    cached: DataFrame | None = None
+    # the persisted narrow flagged frame; callers should ``unpersist()``
+    # once both outputs are materialized so long-lived sessions don't
+    # accumulate cache (idempotent)
+    cached: DataFrame
 
     def unpersist(self) -> None:
-        if self.cached is not None:
-            self.cached.unpersist()
-            self.cached = None
+        self.cached.unpersist()
 
 
 class ValidationRunner:
@@ -106,7 +123,6 @@ class ValidationRunner:
         reference: DataFrame | None = None,
         baselines: dict[str, pd.DataFrame] | None = None,
         part_col: str | None = None,
-        cluster_key: str | None = "conv_id",
         carry_cols: tuple[str, ...] = (),
         pre_clustered: bool = False,
     ) -> None:
@@ -115,20 +131,8 @@ class ValidationRunner:
         ``pmod(xxhash64(conv_id), n_buckets)``. Must be functionally
         dependent on conv_id so verdicts stay conversation-aligned.
 
-        ``cluster_key``: when set (default ``conv_id``), the narrow frame
-        is hash-repartitioned ONCE on this column and every downstream
-        operator — the reference-equality join on (conv_id, turn_idx),
-        the conversations-dim join on conv_id, and the ordering windows —
-        rides that single exchange (subset co-partitioning via
-        ``spark.sql.requireAllClusterKeysForCoPartition=false``; the
-        window even reuses the SMJ sort because conv_id,turn_idx ordering
-        is a superset of the window's requirement). Measured at 9M rows
-        this removes one full-frame exchange + one sort vs the naive
-        plan. Set to None to let Catalyst plan each exchange
-        independently.
-
         ``pre_clustered``: the input table is ALREADY hash-distributed
-        by ``cluster_key`` — a bucketed table (``sources/bucketed``,
+        by conv_id — a bucketed table (``sources/bucketed``,
         read via ``spark.table`` so the bucket spec survives) or an
         Iceberg ``bucket(N, conv_id)`` layout. The runner then skips
         its own repartition and the scan's bucket partitioning carries
@@ -144,7 +148,6 @@ class ValidationRunner:
         self.reference = reference
         self.baselines = baselines or {}
         self.part_col = part_col
-        self.cluster_key = cluster_key
         # payload columns a caller needs carried through the narrow frame
         # (e.g. the streaming watermark needs ts); every extra column
         # multiplies across all downstream exchanges, so opt-in only
@@ -158,7 +161,7 @@ class ValidationRunner:
 
     # ------------------------------------------------------------------ plan
 
-    def _flagged(self, fact: DataFrame) -> tuple[DataFrame, list[tuple[Check, str]]]:
+    def _flagged(self, fact: DataFrame) -> FlagPlan:
         """Two-stage flagging plan, shuffle-volume-aware:
 
         Stage A (map-only, pre-shuffle): evaluate every row-level
@@ -170,10 +173,18 @@ class ValidationRunner:
         instead of the full transcript text.
 
         Stage B: referential joins + ordering windows over the narrow
-        frame only.
+        frame only. When a check needs conversation locality, the frame
+        is hash-repartitioned ONCE on conv_id and every downstream
+        operator — the reference-equality join on (conv_id, turn_idx),
+        the conversations-dim join on conv_id, and the ordering windows
+        — rides that single exchange (subset co-partitioning via
+        ``spark.sql.requireAllClusterKeysForCoPartition=false``; the
+        window even reuses the SMJ sort because conv_id,turn_idx ordering
+        is a superset of the window's requirement). Measured at 9M rows
+        this removes one full-frame exchange + one sort vs the naive
+        plan.
 
-        Returns (flagged_df, [(check, flag_col)]); precomputed detail
-        columns ride along as ``<flag_col>_d``.
+        Precomputed detail columns ride along as ``<flag_col>_d``.
         """
         row_checks = dsl.row_level(self.checks)
         ri_checks = dsl.of_type(self.checks, RefIntegrity)
@@ -189,15 +200,13 @@ class ValidationRunner:
             extra |= set(chk.fk)
         for chk in te_checks:
             extra |= set(chk.keys)
+        for chk in dsl.of_type(self.checks, Freshness):
+            extra.add(chk.ts_col)
         # NOTE: ts (or any other payload column) enters the narrow frame
         # only if a check references it or the caller asked via carry_cols
         # — every surplus 8B/row column multiplies across all downstream
         # exchanges
         extra |= set(self.carry_cols)
-        # the cluster key must exist IN THE NARROW FRAME (the repartition
-        # below runs on it) even when no check references it
-        if self.cluster_key is not None:
-            extra |= {self.cluster_key} & fact_cols
         extra -= {"conv_id", "turn_idx"}
 
         select_cols = [
@@ -223,34 +232,30 @@ class ValidationRunner:
         # per check (e.g. length(text) — 8 B/row instead of a second full
         # scan of the wide fact table later); 'turn_count' needs no column
         # at all (it aggregates the keys already present)
-        self._drift_cols: dict[str, str] = {}
+        drift_cols: dict[str, str] = {}
         for g, chk in enumerate(drift_checks):
             if chk.metric == "turn_count":
-                self._drift_cols[chk.name] = "turn_count"
+                drift_cols[chk.name] = "turn_count"
             elif chk.metric == "text_length" and "text" in fact_cols:
                 select_cols.append(F.length(F.col("text")).cast("double").alias(f"__dm{g}"))
-                self._drift_cols[chk.name] = f"__dm{g}"
+                drift_cols[chk.name] = f"__dm{g}"
             elif chk.metric in fact_cols:
                 select_cols.append(F.col(chk.metric).cast("double").alias(f"__dm{g}"))
-                self._drift_cols[chk.name] = f"__dm{g}"
+                drift_cols[chk.name] = f"__dm{g}"
         df = fact.select(*select_cols)  # ← the narrow frame
 
         # single-exchange clustering: everything below (reference join,
-        # dim joins on the cluster key, ordering windows, ref-side dedup)
-        # rides ONE hash(cluster_key) repartition; subset co-partitioning
+        # dim joins on conv_id, ordering windows, ref-side dedup) rides
+        # ONE hash(conv_id) repartition; subset co-partitioning
         # lets the (conv_id, turn_idx) SMJ reuse it
         # NOTE: subset co-partitioning relies on
         # spark.sql.requireAllClusterKeysForCoPartition=false, set ONCE in
         # session.get_spark (not here — mutating session conf mid-plan
         # would leak into unrelated queries on a shared session)
         n_shuffle = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        clustered = self._clustered = bool(
-            self.cluster_key is not None
-            and self.cluster_key in fact.columns
-            and (mono_checks or te_checks or ri_checks)
-        )
+        clustered = bool(mono_checks or te_checks or ri_checks)
         if clustered and not self.pre_clustered:
-            df = df.repartition(n_shuffle, self.cluster_key)
+            df = df.repartition(n_shuffle, "conv_id")
 
         for t, chk in enumerate(te_checks):
             # compare canonical-text xxhash64 (computed pre-shuffle on both
@@ -271,10 +276,10 @@ class ValidationRunner:
                     *[F.col(k).alias(f"__ref{t}_{k}") for k in chk.keys],
                     F.when(src.isNotNull(), F.xxhash64(rhs)).alias(ref_hash),
                 )
-            if clustered and self.cluster_key in chk.keys:
+            if clustered and "conv_id" in chk.keys:
                 # co-partition the reference on the same key so BOTH the
                 # dedup below and the equality join stay exchange-free
-                ref = ref.repartition(n_shuffle, f"__ref{t}_{self.cluster_key}")
+                ref = ref.repartition(n_shuffle, f"__ref{t}_conv_id")
             ref = ref.dropDuplicates([f"__ref{t}_{k}" for k in chk.keys])
             # plain equality, not eqNullSafe: NULL keys never match a
             # reference row either way (left join ⇒ ref_hash null ⇒ no
@@ -303,8 +308,8 @@ class ValidationRunner:
             )
             if chk.broadcast:
                 sel = F.broadcast(sel.dropDuplicates())
-            elif clustered and chk.fk == (self.cluster_key,):
-                # dim shuffles once on the cluster key; the fact side is
+            elif clustered and chk.fk == ("conv_id",):
+                # dim shuffles once on conv_id; the fact side is
                 # already there, so this SMJ adds no fact-side exchange
                 # (and its conv_id sort is a prefix of the TE-join sort)
                 sel = sel.repartition(n_shuffle, f"__pk{j}_0").dropDuplicates()
@@ -350,7 +355,7 @@ class ValidationRunner:
             ).withColumn(f"{col}_prev", prev)
             flags.append((chk, col))
 
-        return df, flags
+        return FlagPlan(df, tuple(flags), clustered, drift_cols)
 
     def _detail(self, chk: Check, flag_col: str) -> F.Column:
         if isinstance(chk, RefIntegrity):
@@ -378,7 +383,15 @@ class ValidationRunner:
             return chk.column
         return chk.column_name()
 
-    def _row_violations(self, flagged: DataFrame, flags: list[tuple[Check, str]]) -> DataFrame:
+    def _row_violations(
+        self,
+        flagged: DataFrame,
+        flags: tuple[tuple[Check, str], ...],
+        extra_cols: tuple[str, ...] = (),
+    ) -> DataFrame:
+        """One row per (row, failed check): VIOLATIONS_SCHEMA, with
+        ``extra_cols`` of the narrow frame (e.g. the streaming ``ts``)
+        placed after turn_idx."""
         if not flags:
             return flagged.sparkSession.createDataFrame([], VIOLATIONS_SCHEMA)
         structs = [
@@ -397,6 +410,7 @@ class ValidationRunner:
                 "part_id",
                 "conv_id",
                 "turn_idx",
+                *extra_cols,
                 F.explode(F.array_compact(F.array(*structs))).alias("v"),
             )
             .select(
@@ -404,6 +418,7 @@ class ValidationRunner:
                 F.col("v.check_id").alias("check_id"),
                 "conv_id",
                 "turn_idx",
+                *extra_cols,
                 F.col("v.column").alias("column"),
                 F.col("v.detail").alias("detail"),
             )
@@ -413,7 +428,7 @@ class ValidationRunner:
         self, fact: DataFrame, flagged: DataFrame | None = None
     ) -> DataFrame | None:
         """``flagged``: when the clustered narrow frame is available AND
-        the unique key contains the cluster key, count duplicates on it —
+        the unique key contains conv_id, count duplicates on it —
         the frame is hash-partitioned by a subset of the grouping keys,
         so the aggregation is partition-local: no extra scan of the fact
         table and no extra shuffle. The salted two-phase aggregation
@@ -424,7 +439,7 @@ class ValidationRunner:
             key = list(chk.columns)
             rides_cluster = (
                 flagged is not None
-                and self.cluster_key in key
+                and "conv_id" in key
                 and all(k in flagged.columns for k in key)
             )
             if rides_cluster:
@@ -452,60 +467,25 @@ class ValidationRunner:
 
     # ------------------------------------------------------------------ run
 
-    def run(self, fact: DataFrame, persist: bool = True) -> ValidationResult:
-        """``persist=True`` caches one intermediate so the expensive
-        flagged scan (full-row predicates + canonicalize + joins +
-        windows) executes once even though several outputs consume it:
+    def run(self, fact: DataFrame) -> ValidationResult:
+        """Validate ``fact``. Every output derives from one ``FlagPlan``
+        whose narrow frame is always persisted (MEMORY_AND_DISK), so the
+        expensive flagged scan (full-row predicates + canonicalize +
+        joins + windows) runs once although violations, uniqueness,
+        row counts, freshness and drift histograms all read it.
 
-        * clustered plan: the NARROW flagged frame is persisted
-          (MEMORY_AND_DISK; ~50 B/row). Row violations (explode),
-          uniqueness counts (partition-local — the frame is already
-          hash-partitioned on the cluster key), per-partition row
-          counts, drift-metric histograms and freshness max-ts aggregates
-          (when ts rides the frame) are all derived from it: the fact
-          table is scanned exactly once per run.
-        * unclustered plan: the (much smaller) violations frame is
-          persisted and uniqueness/row counts re-scan fact with pruned
-          columns; a Drift check still forces the narrow-frame cache so
-          histograms never re-read the wide table.
-
-        The persisted intermediate is returned as ``result.cached`` —
-        call ``result.unpersist()`` once both outputs are materialized."""
-        from pyspark import StorageLevel
-
+        The persisted frame is returned as ``result.cached`` — call
+        ``result.unpersist()`` once both outputs are materialized."""
         spark = fact.sparkSession
-        flagged, flags = self._flagged(fact)
-        # reuse of the flagged frame by uniqueness/row-counts/drift only
-        # pays when it is cached — otherwise they would recompute the
-        # whole expensive scan and the pruned fact scans are cheaper.
-        # Drift metrics riding the narrow frame (self._drift_cols) make
-        # the cache worthwhile even without clustering: the histogram pass
-        # then reads ~8 B/row from cache instead of re-scanning fact.
-        reuse = persist and (
-            getattr(self, "_clustered", False) or bool(self._drift_cols)
-        )
-        cached: DataFrame | None = None
-        if reuse:
-            flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = flagged
-        violations = self._row_violations(flagged, flags)
-        uniq = self._unique_violations(
-            fact, flagged if reuse and getattr(self, "_clustered", False) else None
-        )
+        plan = self._flagged(fact)
+        flagged = plan.frame.persist(StorageLevel.MEMORY_AND_DISK)
+        violations = self._row_violations(flagged, plan.flags)
+        uniq = self._unique_violations(fact, flagged if plan.clustered else None)
         if uniq is not None:
             violations = violations.unionByName(uniq)
-        if persist and not reuse:
-            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-            cached = violations
 
-        # per-partition row counts: from the cached narrow frame when
-        # available (tiny partial-agg shuffle), else a column-pruned scan
-        if reuse:
-            parts = flagged.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_rows"))
-        else:
-            parts = fact.select(self.pid_expr().alias("part_id")).groupBy(
-                "part_id"
-            ).agg(F.count(F.lit(1)).alias("n_rows"))
+        # per-partition row counts (tiny partial-agg shuffle)
+        parts = flagged.groupBy("part_id").agg(F.count(F.lit(1)).alias("n_rows"))
 
         count_checks = [
             c
@@ -555,35 +535,26 @@ class ValidationRunner:
                 )
             )
 
-        # per-partition freshness verdicts (tiny max-ts aggregate) — from
-        # the persisted narrow frame whenever ts already rides it (it
-        # does for the standard suite: MonotonicOrder's tiebreak carries
-        # ts), else a pruned fact scan
-        fresh_checks = dsl.of_type(self.checks, Freshness)
-        if fresh_checks:
-            import time as _time
-
-            for chk in fresh_checks:
-                as_of = chk.as_of if chk.as_of is not None else int(_time.time())
-                lag = (F.lit(as_of) - F.unix_timestamp(F.max(F.col(chk.ts_col)))).cast(
-                    "double"
+        # per-partition freshness verdicts (tiny max-ts aggregate; the
+        # ts column rides the narrow frame)
+        for chk in dsl.of_type(self.checks, Freshness):
+            as_of = chk.as_of if chk.as_of is not None else int(time.time())
+            lag = (F.lit(as_of) - F.unix_timestamp(F.max(F.col(chk.ts_col)))).cast(
+                "double"
+            )
+            fv = (
+                flagged.groupBy("part_id")
+                .agg(lag.alias("statistic"))
+                .select(
+                    "part_id",
+                    F.lit(chk.name).alias("check_id"),
+                    F.lit(None).cast("bigint").alias("n_rows"),
+                    F.lit(0).cast("bigint").alias("n_violations"),
+                    "statistic",
+                    (F.col("statistic") <= chk.max_age_seconds).alias("passed"),
                 )
-                if reuse and chk.ts_col in flagged.columns:
-                    grouped = flagged.groupBy("part_id")
-                else:
-                    grouped = fact.groupBy(self.pid_expr().alias("part_id"))
-                fv = (
-                    grouped.agg(lag.alias("statistic"))
-                    .select(
-                        "part_id",
-                        F.lit(chk.name).alias("check_id"),
-                        F.lit(None).cast("bigint").alias("n_rows"),
-                        F.lit(0).cast("bigint").alias("n_violations"),
-                        "statistic",
-                        (F.col("statistic") <= chk.max_age_seconds).alias("passed"),
-                    )
-                )
-                verdicts = verdicts.unionByName(fv)
+            )
+            verdicts = verdicts.unionByName(fv)
 
         drift_checks = dsl.of_type(self.checks, Drift)
         if drift_checks and self.baselines:
@@ -591,22 +562,20 @@ class ValidationRunner:
 
             # feed the histograms from the persisted narrow frame (the
             # metric was pre-computed map-side as one double column):
-            # Drift adds ZERO extra fact scans to the clustered plan
-            metric_frames: dict[str, DataFrame] | None = None
-            if reuse:
-                metric_frames = {}
-                for chk in drift_checks:
-                    src = self._drift_cols.get(chk.name)
-                    if src == "turn_count":
-                        metric_frames[chk.metric] = (
-                            flagged.groupBy("part_id", "conv_id")
-                            .agg(F.count(F.lit(1)).alias("value"))
-                            .select("part_id", "value")
-                        )
-                    elif src is not None:
-                        metric_frames[chk.metric] = flagged.select(
-                            "part_id", F.col(src).alias("value")
-                        )
+            # Drift adds ZERO extra fact scans
+            metric_frames: dict[str, DataFrame] = {}
+            for chk in drift_checks:
+                src = plan.drift_cols.get(chk.name)
+                if src == "turn_count":
+                    metric_frames[chk.metric] = (
+                        flagged.groupBy("part_id", "conv_id")
+                        .agg(F.count(F.lit(1)).alias("value"))
+                        .select("part_id", "value")
+                    )
+                elif src is not None:
+                    metric_frames[chk.metric] = flagged.select(
+                        "part_id", F.col(src).alias("value")
+                    )
             dv = drift_verdicts(
                 fact,
                 drift_checks,
@@ -618,7 +587,7 @@ class ValidationRunner:
             verdicts = verdicts.unionByName(dv)
 
         return ValidationResult(
-            violations=violations, verdicts=verdicts, cached=cached
+            violations=violations, verdicts=verdicts, cached=flagged
         )
 
     @staticmethod

@@ -43,18 +43,6 @@ MANIFEST_SCHEMA = (
 )
 
 
-def input_fingerprint(fact: DataFrame) -> str:
-    """Stable identity of the WHOLE validated input: md5 over the sorted
-    input file list (parquet/Iceberg scans), falling back to the
-    analyzed plan (in-memory fixtures). Iceberg analogue: snapshot id.
-    The resume unit is the per-partition fingerprint
-    (``ValidationJob.partition_fingerprints``); this global form remains
-    for callers that want one identity string per run."""
-    files = sorted(fact.inputFiles())
-    basis = "\n".join(files) if files else fact._jdf.queryExecution().analyzed().toString()
-    return hashlib.md5(basis.encode()).hexdigest()
-
-
 class ValidationJob:
     """Checkpointed wrapper around a ValidationRunner.
 
@@ -154,8 +142,7 @@ class ValidationJob:
                 for r in agg
             }
         # "files": per-partition sorted file list from the planning scan;
-        # in-memory inputs (no files) fall back to the analyzed plan —
-        # the same global basis input_fingerprint() uses
+        # in-memory inputs (no files) fall back to the analyzed plan
         agg = self._files_frame(fact).collect()
         plan_basis = None
         out: dict[int, str] = {}
@@ -177,7 +164,7 @@ class ValidationJob:
 
     def _content_columns(self, fact: DataFrame) -> set[str]:
         """Columns the content fingerprint hashes: the checks' read set
-        (``dsl.validated_columns``) ∪ partition identity (cluster key /
+        (``dsl.validated_columns``) ∪ partition identity (conv_id /
         part_col) ∪ carry_cols, intersected with what the frame actually
         has. Falls back to ALL columns if the intersection is empty
         (a pathological no-column check suite must still fingerprint
@@ -185,9 +172,7 @@ class ValidationJob:
         from hdfs_anomaly_detection_spark.constraints import dsl
 
         wanted = dsl.validated_columns(self.runner.checks)
-        wanted |= set(self.runner.carry_cols)
-        if self.runner.cluster_key:
-            wanted.add(self.runner.cluster_key)
+        wanted |= set(self.runner.carry_cols) | {"conv_id"}
         if self.runner.part_col:
             wanted.add(self.runner.part_col)
         cols = wanted & set(fact.columns)
@@ -235,15 +220,6 @@ class ValidationJob:
             .toPandas()
         )
         return {int(r["part_id"]): r["fp"] for _, r in pdf.iterrows()}
-
-    def completed_parts(self, spark: SparkSession, fingerprint: str) -> set[int]:
-        """Partitions whose latest completed fingerprint equals
-        ``fingerprint`` (kept for global-identity callers)."""
-        return {
-            p
-            for p, fp in self.completed_fingerprints(spark).items()
-            if fp == fingerprint
-        }
 
     # ------------------------------------------------------------------ run
 

@@ -22,6 +22,7 @@ from hdfs_anomaly_detection_spark.constraints import (
     Range,
     RefIntegrity,
     Unique,
+    ValidationResult,
     ValidationRunner,
 )
 from hdfs_anomaly_detection_spark.sources.transcripts_view import (
@@ -37,7 +38,8 @@ _TOOL_IN = ", ".join(f"'{t}'" for t in TOOL_LIST)
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-# frames persisted by query bodies (LSH signature/feature frames); the
+# frames persisted by query bodies (LSH signature/feature frames, the
+# validation runner's narrow frame); the
 # harnesses materialize one query at a time, so the NEXT query start —
 # or an explicit release_persisted() — unpersists them. Without this the
 # cached blocks accumulate across a shared session (ADVICE r2).
@@ -54,6 +56,14 @@ def release_persisted() -> None:
     """Unpersist every frame a query body cached (idempotent)."""
     while _PERSISTED:
         _PERSISTED.pop().unpersist()
+
+
+def _validate(t: DataFrame, *args, **kwargs) -> ValidationResult:
+    """``ValidationRunner(*args, **kwargs).run(t)`` whose cached narrow
+    frame is released at the next query start, like the frames above."""
+    res = ValidationRunner(*args, **kwargs).run(t)
+    _PERSISTED.append(res.cached)
+    return res
 
 
 def register(name: str, oracle: str | None = None):
@@ -99,7 +109,7 @@ FROM transcripts WHERE text IS NULL
 )
 def v_null_text_rows(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    res = ValidationRunner([NotNull("not_null_text", column="text")], part_col="part_id").run(t)
+    res = _validate(t, [NotNull("not_null_text", column="text")], part_col="part_id")
     return _viol_cols(res.violations)
 
 
@@ -113,10 +123,11 @@ FROM transcripts WHERE role IS NOT NULL AND role NOT IN ('user','assistant','too
 )
 def v_role_domain_rows(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [InSet("role_domain", column="role", values=("user", "assistant", "tool"))],
         part_col="part_id",
-    ).run(t)
+    )
     return _viol_cols(res.violations)
 
 
@@ -130,10 +141,11 @@ FROM transcripts WHERE turn_idx IS NOT NULL AND (turn_idx < 0 OR turn_idx > 1000
 )
 def v_turn_range_rows(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [Range("turn_idx_range", column="turn_idx", min=0, max=100_000)],
         part_col="part_id",
-    ).run(t)
+    )
     return _viol_cols(res.violations)
 
 
@@ -147,9 +159,10 @@ FROM transcripts GROUP BY part_id, conv_id, turn_idx HAVING count(*) > 1
 )
 def v_unique_dup_keys(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [Unique("unique_turn", columns=("conv_id", "turn_idx"))], part_col="part_id"
-    ).run(t)
+    )
     return _viol_cols(res.violations)
 
 
@@ -163,11 +176,12 @@ FROM transcripts WHERE tool IS NOT NULL AND tool NOT IN ({_TOOL_IN})
 )
 def v_ref_tool_rows(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [RefIntegrity("ref_tool", fk=("tool",), dim="tools", pk=("tool",), broadcast=True)],
         part_col="part_id",
         dims={"tools": _tools_dim(spark)},
-    ).run(t)
+    )
     return _viol_cols(res.violations)
 
 
@@ -186,10 +200,11 @@ WHERE (prev IS NULL AND turn_idx <> 0) OR (prev IS NOT NULL AND turn_idx <> prev
 )
 def v_turn_order_rows(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [MonotonicOrder("turn_order", partition_cols=("conv_id",), order_col="turn_idx")],
         part_col="part_id",
-    ).run(t)
+    )
     return _viol_cols(res.violations)
 
 
@@ -248,7 +263,7 @@ def v_verdicts_grid(spark, sf_dir):
         RefIntegrity("ref_tool", fk=("tool",), dim="tools", pk=("tool",), broadcast=True),
         MonotonicOrder("turn_order", partition_cols=("conv_id",), order_col="turn_idx"),
     ]
-    res = ValidationRunner(checks, part_col="part_id", dims={"tools": _tools_dim(spark)}).run(t)
+    res = _validate(t, checks, part_col="part_id", dims={"tools": _tools_dim(spark)})
     return res.verdicts.select("part_id", "check_id", "n_rows", "n_violations", "passed")
 
 
@@ -607,11 +622,12 @@ def v_text_equals_rows(spark, sf_dir):
     register_views_sql = TRANSCRIPTS_CTE + "SELECT conv_id, turn_idx, text FROM __clean"
     t = load_transcripts(spark, sf_dir)
     ref = spark.sql(register_views_sql)
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [TextEquals("text_equals", canonicalize=False)],
         part_col="part_id",
         reference=ref,
-    ).run(t)
+    )
     return _viol_cols(res.violations)
 
 
@@ -664,11 +680,12 @@ def v_drift_text_length(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
     clean = spark.sql(TRANSCRIPTS_CTE + "SELECT * FROM __clean")
     baselines = compute_baselines(clean, ["text_length"], part_col="part_id")
-    res = ValidationRunner(
+    res = _validate(
+        t,
         [Drift("drift_text_length", metric="text_length", method="ks", threshold=0.012)],
         baselines=baselines,
         part_col="part_id",
-    ).run(t)
+    )
     return res.verdicts.select("part_id", "check_id", "passed")
 
 

@@ -65,10 +65,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def stop_all() -> None:
-    """Tear down the active session (between parallelism levels in bench)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

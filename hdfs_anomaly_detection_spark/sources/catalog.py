@@ -9,8 +9,7 @@ same four operations and the rest of the engine is backend-agnostic:
 * ``append(df, name)``
 * ``read(name)``
 * ``snapshot(name)`` — lineage token: Iceberg snapshot id, or an
-  md5 over the parquet file list (same basis as
-  ``manifest.input_fingerprint``)
+  md5 over the parquet file list
 
 On Iceberg the manifest's resume fingerprint becomes the snapshot id
 and partition pruning comes from the table's partition spec

@@ -55,32 +55,10 @@ def streaming_violations(
     runner = ValidationRunner(
         safe, n_buckets=n_buckets, dims=dims or {}, carry_cols=("ts",)
     )
-    flagged, flags = runner._flagged(stream_df)
-    if not flags:
+    plan = runner._flagged(stream_df)
+    if not plan.flags:
         raise ValueError("no stream-safe checks supplied")
-    structs = [
-        F.when(
-            F.col(col),
-            F.struct(
-                F.lit(chk.name).alias("check_id"),
-                F.lit(runner._column_of(chk)).alias("column"),
-                runner._detail(chk, col).alias("detail"),
-            ),
-        )
-        for chk, col in flags
-    ]
-    return flagged.select(
-        "part_id", "conv_id", "turn_idx", "ts",
-        F.explode(F.array_compact(F.array(*structs))).alias("v"),
-    ).select(
-        "part_id",
-        F.col("v.check_id").alias("check_id"),
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.col("v.column").alias("column"),
-        F.col("v.detail").alias("detail"),
-    )
+    return runner._row_violations(plan.frame, plan.flags, extra_cols=("ts",))
 
 
 def windowed_violation_counts(

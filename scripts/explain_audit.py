@@ -147,7 +147,7 @@ def main() -> None:
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # the tiny
     # fixture would auto-broadcast everything and hide the at-scale SMJ
     # shape; the explicitly hinted tools dim still broadcasts
-    flagged, flags = runner._flagged(fx.fact)
+    flagged = runner._flagged(fx.fact).frame
     plan = plan_of(flagged)
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     fmt = plan.split("== Physical Plan ==")[1]

@@ -81,7 +81,7 @@ def test_pre_clustered_validation_zero_fact_exchange(bucketed):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         pre = ValidationRunner(checks, n_buckets=8, pre_clustered=True)
-        flagged, _ = pre._flagged(fact)
+        flagged = pre._flagged(fact).frame
         plan = flagged._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan[:3000]
         assert "Window" in plan  # the ordering window really is there
@@ -94,12 +94,12 @@ def test_pre_clustered_validation_zero_fact_exchange(bucketed):
         old_sp = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "16")
         try:
-            flagged2, _ = plain._flagged(fact)
+            flagged2 = plain._flagged(fact).frame
             plan2 = flagged2._jdf.queryExecution().executedPlan().toString()
             assert "Exchange hashpartitioning" in plan2
-            flagged3, _ = ValidationRunner(
+            flagged3 = ValidationRunner(
                 checks, n_buckets=8, pre_clustered=True
-            )._flagged(fact)
+            )._flagged(fact).frame
             plan3 = flagged3._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan3, plan3[:3000]
         finally:
@@ -161,11 +161,11 @@ def test_pre_clustered_job_incremental_end_to_end(spark, tmp_path):
         old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
-            flagged, _ = runner._flagged(fact)
+            flagged = runner._flagged(fact).frame
             plan = flagged._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan, plan[:3000]
             sub = fact.filter(runner.pid_expr().isin([3]))
-            flagged_sub, _ = runner._flagged(sub)
+            flagged_sub = runner._flagged(sub).frame
             plan_sub = flagged_sub._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan_sub, plan_sub[:3000]
         finally:

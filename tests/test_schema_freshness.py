@@ -37,6 +37,23 @@ def test_schema_conformance_detects_drift(spark):
     assert not verd[verd["check_id"] == "schema"]["passed"].iloc[0]
 
 
+def _plan_leaves(df) -> set[str]:
+    """Leaf node names of ``df``'s physical plan, through adaptive
+    wrappers and query stages but not into cached relations."""
+    out, stack = set(), [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name, kids = node.nodeName(), node.children()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif kids.size() == 0:
+            out.add(name)
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def test_freshness_verdicts(spark):
     fact = clean_transcripts(spark, FixtureConfig(n_conversations=50))
     # data timestamps start at EPOCH_BASE; as_of shortly after → fresh
@@ -49,6 +66,12 @@ def test_freshness_verdicts(spark):
     f = verd[verd["check_id"] == "fresh"]
     assert len(f) == 4 and f["passed"].all()
     assert (f["statistic"] >= 0).all()
+    # a Freshness-only suite still reads ts from the cached narrow frame:
+    # outside the cache the verdicts plan has no scan of the fact table
+    leaves = _plan_leaves(fresh.verdicts)
+    assert "InMemoryTableScan" in leaves
+    assert leaves <= {"InMemoryTableScan", "LocalTableScan"}, leaves
+    fresh.unpersist()
 
     stale = ValidationRunner(
         [Freshness("fresh", ts_col="ts", max_age_seconds=60, as_of=EPOCH_BASE + 10**8)],

@@ -190,3 +190,63 @@ def test_corrupted_preset_runs(spark):
     viol = res.violations.toPandas()
     assert (viol["check_id"] == "turn_order").any()
     assert not res.verdicts.toPandas()["passed"].all()
+
+
+def _verdicts_sorted(res) -> pd.DataFrame:
+    verd = res.verdicts.toPandas()
+    return verd.sort_values(["part_id", "check_id"]).reset_index(drop=True)
+
+
+def test_run_leaves_no_state_on_runner(spark):
+    """``run`` derives everything from its plan value: the runner's
+    attributes are the same objects before and after a call."""
+    fx = build_fixture(spark, FixtureConfig(n_conversations=50, gap_rate=0.02))
+    runner = ValidationRunner(
+        default_transcript_checks(),
+        n_buckets=N_BUCKETS,
+        dims={"conversations": fx.conversations, "tools": fx.tools},
+    )
+    before = dict(vars(runner))
+    res = runner.run(fx.fact)
+    res.verdicts.count()
+    res.unpersist()
+    assert vars(runner) == before
+
+
+def test_shared_runner_concurrent_inputs(spark, run):
+    """One runner shared by two threads (the ``foreachBatch`` shape) on
+    two different inputs: each result equals its own sequential run."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hdfs_anomaly_detection_spark.constraints import Drift
+    from hdfs_anomaly_detection_spark.sketch.drift import compute_baselines
+
+    fx = run[0]
+    clean_cfg = FixtureConfig(n_conversations=100)
+    runner = ValidationRunner(
+        default_transcript_checks()
+        + [Drift("drift_len", metric="text_length", method="ks", threshold=0.2)],
+        n_buckets=N_BUCKETS,
+        dims={"conversations": fx.conversations, "tools": fx.tools},
+        baselines=compute_baselines(
+            clean_transcripts(spark, clean_cfg), ["text_length"], n_buckets=N_BUCKETS
+        ),
+    )
+    inputs = [fx.fact, build_fixture(spark, clean_cfg).fact]
+
+    def verdicts_of(fact):
+        res = runner.run(fact)
+        try:
+            return _verdicts_sorted(res), res.violations.count()
+        finally:
+            res.unpersist()
+
+    sequential = [verdicts_of(f) for f in inputs]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        threaded = list(pool.map(verdicts_of, inputs))
+    for (want, want_n), (got, got_n) in zip(sequential, threaded):
+        pd.testing.assert_frame_equal(got, want)
+        assert got_n == want_n
+    # the two inputs really differ (the clean one's only violations are
+    # conversations the corrupted fixture's dim dropped)
+    assert sequential[0][1] > sequential[1][1]
