@@ -2,7 +2,8 @@
 
 Runs the headline validation workload + representative operator queries
 at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this process may run
+on) and prints ONE JSON line::
 
     {"metric": "validated_turns_per_sec", "value": <throughput>,
      "unit": "sec", "queries": {name: sec, ...}, "sf": <sf>, ...}
@@ -38,7 +39,8 @@ from hdfs_anomaly_detection_spark.fixtures import (  # noqa: E402
 from hdfs_anomaly_detection_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+HOST_CPUS = len(os.sched_getaffinity(0))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(HOST_CPUS)))
 N_CONVS = int(os.environ.get("BENCH_CONVS", "250000"))
 # repetitions per query; medians are reported (this host's cycle budget
 # drifts between trials — single-shot numbers conflate plan changes
@@ -170,6 +172,7 @@ def main() -> None:
                 "validated_rows": n_rows,
                 "violations_found": n_violations,
                 "cpus": CPUS,
+                "host_cpus": HOST_CPUS,
                 "total_sec": round(sum(timings.values()), 3),
             }
         )

@@ -23,18 +23,24 @@ Plan shape (scale rationale):
   histograms all ride that single exchange (subset co-partitioning).
 * One caching policy: every run persists the narrow frame
   (MEMORY_AND_DISK, ~50 B/row) and nothing else. Row violations,
-  partition-local uniqueness, per-partition row counts, freshness max-ts
-  aggregates (every Freshness ``ts_col`` rides the frame) and drift
-  histograms all read it, so the fact table is scanned once per run;
-  only unclustered uniqueness re-reads the fact table.
+  uniqueness counts (every Unique key column rides the frame),
+  per-partition row counts, freshness max-ts aggregates (every
+  Freshness ``ts_col`` rides the frame) and drift histograms all read
+  it, so the fact table is scanned once per run.
 * Uniqueness without clustering runs as a salted two-phase aggregation
-  (partial counts per input split → final merge), so a hot
+  (partial counts per cached split → final merge), so a hot
   (conv_id, turn_idx) key never concentrates on one reducer; with
   clustering the count is partition-local (strictly better — zero
   cross-node movement for the same exact counts).
 * Verdicts = tiny aggregates: violation counts per (part_id, check_id)
   joined against per-partition row counts. Nothing driver-side is
-  proportional to row count.
+  proportional to row count. The small driver-side tables (the checks
+  grid, schema-conformance rows, drift verdict rows, the empty
+  violations frame of a suite without row checks) are Arrow-backed
+  ``LocalRelation``s (``session.local_frame``), never pickled Python
+  lists: reading them starts no Python worker, and Catalyst folds them
+  — a drift-only run's verdicts plan is a single ``LocalRelation`` and
+  collects without a Spark job.
 
 The per-row verdict record mirrors the reference's ``AnomalyResult``
 (``anomaly-detection-service/anomaly_detection_service.py:58-68``); the
@@ -65,6 +71,7 @@ from hdfs_anomaly_detection_spark.constraints.dsl import (
     Unique,
 )
 from hdfs_anomaly_detection_spark.functions.text import canonicalize
+from hdfs_anomaly_detection_spark.session import local_frame
 
 VIOLATIONS_SCHEMA = (
     "part_id int, check_id string, conv_id string, turn_idx int, column string, detail string"
@@ -202,6 +209,8 @@ class ValidationRunner:
             extra |= set(chk.keys)
         for chk in dsl.of_type(self.checks, Freshness):
             extra.add(chk.ts_col)
+        for chk in dsl.of_type(self.checks, Unique):
+            extra |= set(chk.columns)
         # NOTE: ts (or any other payload column) enters the narrow frame
         # only if a check references it or the caller asked via carry_cols
         # — every surplus 8B/row column multiplies across all downstream
@@ -393,7 +402,7 @@ class ValidationRunner:
         ``extra_cols`` of the narrow frame (e.g. the streaming ``ts``)
         placed after turn_idx."""
         if not flags:
-            return flagged.sparkSession.createDataFrame([], VIOLATIONS_SCHEMA)
+            return local_frame(flagged.sparkSession, [], VIOLATIONS_SCHEMA)
         structs = [
             F.when(
                 F.col(col),
@@ -424,30 +433,21 @@ class ValidationRunner:
             )
         )
 
-    def _unique_violations(
-        self, fact: DataFrame, flagged: DataFrame | None = None
-    ) -> DataFrame | None:
-        """``flagged``: when the clustered narrow frame is available AND
-        the unique key contains conv_id, count duplicates on it —
-        the frame is hash-partitioned by a subset of the grouping keys,
-        so the aggregation is partition-local: no extra scan of the fact
-        table and no extra shuffle. The salted two-phase aggregation
-        remains the path whenever clustering is unavailable (and is what
-        hot-key skew tests exercise)."""
+    def _unique_violations(self, flagged: DataFrame, clustered: bool) -> DataFrame | None:
+        """Duplicate keys, counted over the persisted narrow frame (every
+        Unique key column rides it), so uniqueness adds no fact scan.
+        When the frame is clustered AND the key contains conv_id, the
+        frame is hash-partitioned by a subset of the grouping keys and
+        the count is partition-local: no extra shuffle. Otherwise the
+        salted two-phase aggregation runs (and is what the hot-key skew
+        tests exercise)."""
         out = None
+        src = flagged.withColumnRenamed("part_id", "__pid")
         for chk in dsl.of_type(self.checks, Unique):
             key = list(chk.columns)
-            rides_cluster = (
-                flagged is not None
-                and "conv_id" in key
-                and all(k in flagged.columns for k in key)
-            )
-            if rides_cluster:
-                src = flagged.withColumnRenamed("part_id", "__pid")
-            else:
-                src = fact.withColumn("__pid", self.pid_expr())
+            rides_cluster = clustered and "conv_id" in key
             if chk.salted and not rides_cluster:
-                # phase 1: partial counts keyed by input split (explicit salt)
+                # phase 1: partial counts keyed by cached split (explicit salt)
                 partial = src.groupBy(
                     "__pid", *key, F.spark_partition_id().alias("__salt")
                 ).agg(F.count(F.lit(1)).alias("__c"))
@@ -480,7 +480,7 @@ class ValidationRunner:
         plan = self._flagged(fact)
         flagged = plan.frame.persist(StorageLevel.MEMORY_AND_DISK)
         violations = self._row_violations(flagged, plan.flags)
-        uniq = self._unique_violations(fact, flagged if plan.clustered else None)
+        uniq = self._unique_violations(flagged, plan.clustered)
         if uniq is not None:
             violations = violations.unionByName(uniq)
 
@@ -494,7 +494,8 @@ class ValidationRunner:
         ]
         grid = parts.crossJoin(
             F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(c.name, float(c.max_violation_rate)) for c in count_checks],
                     "check_id string, max_rate double",
                 )
@@ -523,13 +524,15 @@ class ValidationRunner:
             diffs = self._schema_diffs(spark, fact, chk)
             if diffs:
                 violations = violations.unionByName(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         [(-1, chk.name, None, None, c, d) for c, d in diffs],
                         VIOLATIONS_SCHEMA,
                     )
                 )
             verdicts = verdicts.unionByName(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(-1, chk.name, 0, len(diffs), None, len(diffs) == 0)],
                     VERDICTS_SCHEMA,
                 )

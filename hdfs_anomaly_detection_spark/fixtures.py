@@ -20,6 +20,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hdfs_anomaly_detection_spark.session import local_frame
+
 EPOCH_BASE = 1735689600  # 2025-01-01T00:00:00Z
 ROLES = ["user", "assistant", "tool"]
 N_TOOLS = 12
@@ -182,7 +184,8 @@ def conversations_dim(spark: SparkSession, cfg: FixtureConfig) -> DataFrame:
 def tools_dim(spark: SparkSession, n_extra: int = 0) -> DataFrame:
     """tools(tool, owner, deprecated). n_extra > 0 pads to a large dim for
     the sort-merge-join path test."""
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         [(t, f"team_{i % 3}", i % 5 == 4) for i, t in enumerate(TOOL_NAMES)],
         "tool string, owner string, deprecated boolean",
     )

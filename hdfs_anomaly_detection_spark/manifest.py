@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.constraints.runner import ValidationRunner
+from hdfs_anomaly_detection_spark.session import local_frame
 
 MANIFEST_SCHEMA = (
     "run_id string, part_id int, status string, started_at timestamp, "
@@ -97,7 +98,7 @@ class ValidationJob:
         try:
             return spark.read.parquet(self.manifest_path)
         except Exception:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(spark, [], MANIFEST_SCHEMA)
 
     def partition_fingerprints(
         self, fact: DataFrame, basis_salt: str = ""
@@ -291,15 +292,15 @@ class ValidationJob:
         rows = [
             (
                 run_id, int(r["part_id"]), "done",
-                _dt.datetime.fromtimestamp(started, _dt.timezone.utc).replace(tzinfo=None),
-                _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
+                _dt.datetime.fromtimestamp(started, _dt.timezone.utc),
+                _dt.datetime.now(_dt.timezone.utc),
                 int(r["n_rows"]), int(r["n_violations"]), int(r["n_checks_failed"]),
                 fps[int(r["part_id"])],
                 json.dumps({"n_checks": len(self.runner.checks)}),
             )
             for _, r in summary.iterrows()
         ]
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+        local_frame(spark, rows, MANIFEST_SCHEMA).write.mode("append").parquet(
             self.manifest_path
         )
         # both outputs are materialized above; release the runner's cached

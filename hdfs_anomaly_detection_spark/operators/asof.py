@@ -113,7 +113,11 @@ def asof_join(
                     contrast, would hide right rows — see module
                     docstring). Costs: one bounded quantile pass over
                     the left ordering column + two small exchanges of
-                    per-(key, segment) aggregates.
+                    per-(key, segment) aggregates. The quantile pass is
+                    EAGER: ``approxQuantile`` runs a Spark job over the
+                    left input when ``asof_join`` is called, to fix the
+                    segment boundaries. The default (1) runs no job —
+                    the call stays a lazy plan builder.
 
     Null ordering values AND null join keys are unmatchable (merge_asof
     / SQL ASOF semantics — ``NULL = NULL`` is not a match): right rows

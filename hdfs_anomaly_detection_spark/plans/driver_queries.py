@@ -25,6 +25,7 @@ from hdfs_anomaly_detection_spark.constraints import (
     ValidationResult,
     ValidationRunner,
 )
+from hdfs_anomaly_detection_spark.session import local_frame
 from hdfs_anomaly_detection_spark.sources.transcripts_view import (
     TRANSCRIPTS_CTE,
     load_table,
@@ -86,7 +87,7 @@ def register(name: str, oracle: str | None = None):
 
 
 def _tools_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(t,) for t in TOOL_LIST], "tool string")
+    return local_frame(spark, [(t,) for t in TOOL_LIST], "tool string")
 
 
 def _viol_cols(df: DataFrame) -> DataFrame:

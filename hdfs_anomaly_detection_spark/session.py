@@ -11,7 +11,37 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side table (``rows`` of tuples in ``schema`` order)
+    as an Arrow-backed ``LocalRelation``.
+
+    ``spark.createDataFrame(<python list>)`` pickles the rows into an
+    opaque ``LogicalRDD``: every action that reads it starts Python
+    worker tasks, and the optimizer cannot fold it (an empty grid or an
+    empty violations frame still plans a scan). An Arrow table becomes a
+    ``LocalRelation`` instead, which Catalyst propagates and folds, so a
+    drift-only run's verdicts collect without a single Spark job.
+
+    Columns are built with ``pa.array`` straight from the Python values,
+    not through pandas: NaN stays NaN and ``None`` stays null in every
+    type (pandas would turn a NaN double into null and an int column
+    with a null into double). Naive datetimes are read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(

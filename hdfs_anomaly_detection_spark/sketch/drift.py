@@ -36,6 +36,7 @@ from hdfs_anomaly_detection_spark.constraints.runner import (
     VERDICTS_SCHEMA,
     part_id_expr,
 )
+from hdfs_anomaly_detection_spark.session import local_frame
 
 GAMMA = 1.02  # log-bucket growth: a key sits less than 2% above |v|
 EXACT_BELOW = 4096.0  # integers with |v| below this keep an exact bucket
@@ -303,4 +304,4 @@ def drift_verdicts(
             b = histogram(base["bucket"].to_numpy()[in_base], base["n"].to_numpy()[in_base])
             stat = stat_of(b, h)
             rows.append((pid, chk.name, n, 0, stat, bool(stat <= chk.threshold)))
-    return spark.createDataFrame(rows, VERDICTS_SCHEMA)
+    return local_frame(spark, rows, VERDICTS_SCHEMA)

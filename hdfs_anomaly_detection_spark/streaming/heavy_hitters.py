@@ -75,6 +75,7 @@ from hdfs_anomaly_detection_spark.sketch.cms import (
     build_cms,
     cms_estimate,
 )
+from hdfs_anomaly_detection_spark.session import local_frame
 
 __all__ = ["StreamingHeavyHitters"]
 
@@ -183,9 +184,9 @@ class StreamingHeavyHitters:
                     with self._state_lock:
                         prior = list(self.candidates)
                     if prior:
-                        spark = batch_df.sparkSession
                         keys = keys.unionByName(
-                            spark.createDataFrame(
+                            local_frame(
+                                batch_df.sparkSession,
                                 [(k,) for k in prior],
                                 keys.schema,
                             )
@@ -310,6 +311,12 @@ class StreamingHeavyHitters:
         between the swap's delete and rename — see
         ``hadoop_io.read_small_swapped``).
 
+        Snapshots written before ``support`` existed carry no
+        ``support`` and may carry ``threshold <= 0``, which the
+        constructor rejects for new trackers. They restore as saved:
+        the effective threshold's floor of 1 admits the same keys such
+        a tracker admitted (every key seen has an estimate >= 1).
+
         Only restore a snapshot written by the same cadence that
         commits epochs: if this snapshot's ``last_epoch`` trails the
         restarted query's checkpoint, epochs in between were committed
@@ -325,11 +332,12 @@ class StreamingHeavyHitters:
         state = json.loads(read_small_swapped(cls._active_spark(), path))
         shh = cls(
             state["key_col"],
-            state["threshold"],
+            max(int(state["threshold"]), 1),
             state["depth"],
             state["width"],
-            support=state.get("support"),  # absent in pre-r5 snapshots
+            support=state.get("support"),  # absent in legacy snapshots
         )
+        shh.threshold = int(state["threshold"])
         if state["counters"] is not None:
             shh.sketch = CountMinSketch(
                 state["depth"],

@@ -360,6 +360,24 @@ def test_split_with_tolerance_identical(spark):
     assert _collect_sorted(split) == _collect_sorted(base)
 
 
+def test_split_forward_with_tolerance_identical(spark):
+    # forward sweep (ts DESC, carry-ins chained from LATER segments) and
+    # the tolerance null-out combined: split equals unsplit, and both
+    # equal merge_asof
+    left, right = _mk(spark, seed=78)
+    l, r = spark.createDataFrame(left), spark.createDataFrame(right)
+    kw = dict(on=["k"], ts="ts", direction="forward", tolerance=300.0, tiebreak="rid")
+    base = asof_join(l, r, **kw)
+    split = asof_join(l, r, hot_key_splits=4, **kw)
+    assert _collect_sorted(split) == _collect_sorted(base)
+    want = _pandas_asof(left, right, "forward", tolerance=300.0)
+    got = base.toPandas().sort_values("lid").reset_index(drop=True)
+    assert got["rid"].fillna(-1).astype("int64").tolist() == (
+        want["rid"].fillna(-1).astype("int64").tolist()
+    )
+    assert got["rid"].notna().any() and got["rid"].isna().any()
+
+
 @pytest.mark.parametrize("direction", ["backward", "forward"])
 def test_split_null_ts_left_rows_stay_unmatched(spark, direction):
     left = spark.createDataFrame(

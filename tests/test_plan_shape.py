@@ -125,6 +125,56 @@ def test_drift_rides_narrow_frame(spark, tmp_path, monkeypatch):
     res.unpersist()
 
 
+def _fact_scans(spark, *dfs) -> int:
+    """File-scan nodes in the physical plans of ``dfs``, through adaptive
+    wrappers, query stages and cached relations, counting each cached
+    relation once (its plan is shared by every scan of the cache)."""
+    identity = spark._jvm.System.identityHashCode
+    n, seen = 0, set()
+    stack = [df._jdf.queryExecution().executedPlan() for df in dfs]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            stack.append(node.plan())
+        elif name == "InMemoryTableScan":
+            builder = node.relation().cacheBuilder()
+            if identity(builder) not in seen:
+                seen.add(identity(builder))
+                stack.append(builder.cachedPlan())
+        elif node.getClass().getSimpleName() == "FileSourceScanExec":
+            n += 1
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
+def test_unclustered_unique_scans_fact_once(spark, tmp_path):
+    """A Unique-only suite needs no exchange, so its frame is not
+    clustered; the salted duplicate count must still read the persisted
+    narrow frame (the key columns ride it), not re-scan the fact table."""
+    from hdfs_anomaly_detection_spark.constraints import Unique
+
+    fx = build_fixture(spark, FixtureConfig(n_conversations=50, dup_rate=0.05))
+    path = str(tmp_path / "fact")
+    fx.fact.write.parquet(path)
+    fact = spark.read.parquet(path)
+    res = ValidationRunner([Unique("u")], n_buckets=4).run(fact)
+    assert _fact_scans(spark, res.violations, res.verdicts) == 1
+    got = sorted(
+        (r["conv_id"], r["turn_idx"], r["detail"]) for r in res.violations.collect()
+    )
+    want = sorted(
+        (r["conv_id"], r["turn_idx"], f"duplicate key count={r['n']}")
+        for r in fact.groupBy("conv_id", "turn_idx").agg(F.count("*").alias("n"))
+        .filter("n > 1").collect()
+    )
+    assert got == want and len(got) > 0
+    res.unpersist()
+
+
 def test_window_reuses_join_sort(flagged_plan):
     # the ordering window must sit directly above the join output without
     # its own Sort+Exchange pair: count Sort operators — 2 SMJs need at

@@ -252,3 +252,37 @@ def test_rejects_no_positive_threshold():
         StreamingHeavyHitters("k")
     with pytest.raises(ValueError, match="support must be"):
         StreamingHeavyHitters("k", support=1.5)
+
+
+def test_load_legacy_snapshot_without_support(spark, tmp_path):
+    """A snapshot written before ``support`` existed has no ``support``
+    key and may hold ``threshold=0`` (then constructible); it restores
+    as saved instead of tripping the constructor's validation."""
+    import json
+
+    from hdfs_anomaly_detection_spark.hadoop_io import write_small_swap
+
+    src = StreamingHeavyHitters("k", 1, depth=3, width=64)
+    src.update(spark.createDataFrame(pd.DataFrame({"k": ["a"] * 3 + ["b"]})), 4)
+    legacy = {
+        "key_col": "k",
+        "threshold": 0,
+        "depth": 3,
+        "width": 64,
+        "counters": src.sketch.counters.tolist(),
+        "total": src.sketch.total,
+        "candidates": list(src.current().items()),
+        "last_epoch": 4,
+    }
+    p = str(tmp_path / "legacy.json")
+    write_small_swap(spark, p, json.dumps(legacy))  # the snapshot writer
+
+    back = StreamingHeavyHitters.load(p)
+    assert (back.threshold, back.support, back.last_epoch) == (0, None, 4)
+    assert back.current() == src.current() == {"a": 3, "b": 1}
+    back.update(spark.createDataFrame(pd.DataFrame({"k": ["a", "c"]})), 5)
+    assert back.current() == {"a": 4, "b": 1, "c": 1}
+    back.update(spark.createDataFrame(pd.DataFrame({"k": ["a"]})), 4)  # replay
+    assert back.current()["a"] == 4
+    with pytest.raises(ValueError, match="threshold > 0 or support > 0"):
+        StreamingHeavyHitters("k", 0)  # new trackers keep the validation
