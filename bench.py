@@ -86,7 +86,7 @@ def bench_fixture_paths(spark):
         dangling_conv_rate=CORRUPTED.dangling_conv_rate,
         dangling_tool_rate=CORRUPTED.dangling_tool_rate,
     )
-    tag = f"c{N_CONVS}_v2"
+    tag = f"c{N_CONVS}_v3"  # v3: ref_hashes carry raw_hash
     paths = {n: f"{CACHE}/{tag}/{n}" for n in ("fact", "conversations", "tools", "ref_hashes")}
     if not os.path.exists(f"{CACHE}/{tag}/_DONE"):
         from hdfs_anomaly_detection_spark.constraints.runner import reference_hashes

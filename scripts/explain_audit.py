@@ -120,14 +120,15 @@ def main() -> None:
     # everything after ONE hash(conv_id) repartition of the narrow frame
     # (ref-equality SMJ, conversations-dim SMJ, ordering window) must ride
     # that exchange; expected shuffles: fact 1x + ref-hash side 1x +
-    # conversations dim 1x (tools dim broadcasts)
-    from pyspark.sql import functions as F
-
+    # conversations dim 1x (tools dim broadcasts). The fact exchange also
+    # carries the raw text for TextEquals: only rows whose raw hash
+    # differs from the reference are canonicalized, above the SMJ.
     from hdfs_anomaly_detection_spark.constraints import (
         TextEquals,
         ValidationRunner,
         default_transcript_checks,
     )
+    from hdfs_anomaly_detection_spark.constraints.runner import reference_hashes
     from hdfs_anomaly_detection_spark.fixtures import (
         FixtureConfig,
         build_fixture,
@@ -140,9 +141,8 @@ def main() -> None:
         default_transcript_checks() + [TextEquals("text_equals")],
         n_buckets=8,
         dims={"conversations": fx.conversations, "tools": fx.tools},
-        reference=clean_transcripts(spark, cfg).select(
-            "conv_id", "turn_idx",
-            F.xxhash64("text").alias("canon_hash")),
+        reference=reference_hashes(
+            clean_transcripts(spark, cfg), TextEquals("text_equals")),
     )
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # the tiny
     # fixture would auto-broadcast everything and hide the at-scale SMJ

@@ -69,7 +69,7 @@ def test_minhash_lsh_finds_exact_and_near_dups(docs):
     pairs = minhash_lsh_candidate_pairs(df, verify_threshold=0.5).toPandas()
     got = set(zip(pairs["id_a"], pairs["id_b"]))
     # every injected exact duplicate pair must be found (Jaccard = 1)
-    for did in pdf[pdf["doc_id"] >= 100000][pdf["doc_id"] < 200000]["doc_id"]:
+    for did in pdf.loc[(pdf["doc_id"] >= 100000) & (pdf["doc_id"] < 200000), "doc_id"]:
         assert (did - 100000, did) in got
     # est_jaccard for true (original, exact-copy) pairs is exactly 1.0
     exact_pairs = pairs[
