@@ -124,7 +124,11 @@ class Regex(Check):
 
 @dataclass(frozen=True)
 class Unique(Check):
-    """Key uniqueness via salted two-phase hash aggregation (runner-planned).
+    """Key uniqueness (runner-planned). On a frame clustered by conv_id
+    and a key that contains conv_id it is a window flag over the
+    conversation (one violation row per duplicate key, on its first
+    row); otherwise a two-phase hash aggregation, salted by input split
+    when ``salted``.
 
     Reference analogue: md5-content-hash dedup / skip-if-seen
     (``anomaly-detection-service/anomaly_detection_service.py:269-271,668-678``).
@@ -253,10 +257,6 @@ def default_transcript_checks(dims: bool = True) -> list[Check]:
 
 # ---------------------------------------------------------------------------
 # helpers used by the runner
-
-
-def row_level(checks: list[Check]) -> list[Check]:
-    return [c for c in checks if c.violation_expr() is not None]
 
 
 def of_type(checks: list[Check], t: type) -> list[Check]:

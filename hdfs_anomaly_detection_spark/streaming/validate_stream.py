@@ -58,7 +58,7 @@ def streaming_violations(
     plan = runner._flagged(stream_df)
     if not plan.flags:
         raise ValueError("no stream-safe checks supplied")
-    return runner._row_violations(plan.frame, plan.flags, extra_cols=("ts",))
+    return runner._row_violations(plan.frame, extra_cols=("ts",))
 
 
 def windowed_violation_counts(

@@ -157,7 +157,7 @@ def main() -> None:
     print(f"- {'✅' if n_ex <= 4 else '❌'} shuffle exchanges = {n_ex} "
           "(≤ 4: fact, ref-hashes, conversations dim, plus the 12-row "
           "tools-dim dedup before its broadcast — the ref-equality SMJ, "
-          "conv-dim SMJ, and ordering window all ride the hash(conv_id) "
+          "conv-dim SMJ, and ordering and uniqueness windows all ride the hash(conv_id) "
           "repartition with no further full-frame exchange)")
     print(f"- {'✅' if n_bc >= 1 else '❌'} tools dim broadcast ({n_bc} BroadcastExchange)")
     print(f"- {'✅' if 'SortMergeJoin' in plan else '❌'} large dims via SortMergeJoin")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.constraints import (
     TextEquals,
+    Unique,
     ValidationRunner,
     default_transcript_checks,
 )
@@ -25,6 +26,7 @@ from hdfs_anomaly_detection_spark.fixtures import (
     FixtureConfig,
     build_fixture,
     clean_transcripts,
+    corrupted_transcripts,
 )
 
 # the fact's text column, under its own name or the runner's alias
@@ -133,6 +135,96 @@ def test_text_equals_text_rides_only_the_fact_exchange(te_flagged):
         assert "regexp_replace" not in child, (part, child[:3000])
     assert "regexp_replace" in plan.toString()
     assert not _text_cols(frame.columns), frame.columns
+
+
+def test_raw_text_reference_canonicalized_only_above_exchanges(spark, tmp_path):
+    # a raw-text reference is gated like the fact side: its raw hash and
+    # text ride its own hash(conv_id) exchange, and canonicalize runs on
+    # both texts only above the SMJ, where the raw hashes differ
+    cfg = FixtureConfig(n_conversations=200, text_mutation_rate=0.05)
+    ref = clean_transcripts(spark, cfg)
+    fact = corrupted_transcripts(spark, cfg)
+    # upper-cased turns differ raw but not canonically: no violation
+    fact = fact.withColumn(
+        "text", F.when(F.col("turn_idx") % 3 == 0, F.upper("text")).otherwise(F.col("text"))
+    )
+    chk = TextEquals("text_equals")
+    path = str(tmp_path / "ref_hashes")
+    reference_hashes(ref, chk).write.parquet(path)
+    raw = ValidationRunner([chk], n_buckets=8, reference=ref)
+    _, plan = _flag_plan(spark, raw, fact)
+    exchanges = _exchanges(plan)
+    carrying = sorted(
+        part for part, names, _ in exchanges
+        if any(re.fullmatch(r"text|__te\d+_x|__ref\d+_x", n) for n in names)
+    )
+    assert len(carrying) == 2, carrying  # the fact's and the reference's
+    for part, _, child in exchanges:
+        assert "regexp_replace" not in child, (part, child[:3000])
+    assert "regexp_replace" in plan.toString()
+
+    def rows(runner):
+        res = runner.run(fact)
+        try:
+            return sorted(tuple(r) for r in res.violations.collect())
+        finally:
+            res.unpersist()
+
+    hashed = ValidationRunner([chk], n_buckets=8, reference=spark.read.parquet(path))
+    got = rows(raw)
+    assert got == rows(hashed) and got
+    assert all(r[-1] == "canonical text differs from reference" for r in got)
+
+
+def _node_names(df) -> list[str]:
+    """Operator names of ``df``'s physical plan, through adaptive
+    wrappers and query stages but not into cached relations."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name, kids = node.nodeName(), node.children()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        out.append(name)
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_verdicts_are_one_aggregate_over_the_cache(spark, fixture):
+    # no explode, no checks grid: one partial/final aggregate over the
+    # persisted frame, unpivoted by an Expand
+    _, fx = fixture
+    runner = ValidationRunner(
+        default_transcript_checks(),
+        n_buckets=8,
+        dims={"conversations": fx.conversations, "tools": fx.tools},
+    )
+    res = runner.run(fx.fact)
+    names = _node_names(res.verdicts)
+    assert names.count("InMemoryTableScan") == 1, names
+    assert names.count("HashAggregate") == 2, names
+    assert "Expand" in names, names
+    for op in ("Generate", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert op not in names, names
+    res.unpersist()
+
+
+def test_unique_window_adds_no_sort_or_exchange(spark, fixture):
+    _, fx = fixture
+    dims = {"conversations": fx.conversations, "tools": fx.tools}
+
+    def shape(checks):
+        _, plan = _flag_plan(spark, ValidationRunner(checks, n_buckets=8, dims=dims), fx.fact)
+        return plan.toString().count("Sort ["), len(_exchanges(plan)), plan.toString()
+
+    sorts, exchanges, plan = shape(default_transcript_checks())
+    assert "rank(" in plan  # the Unique check is a window flag here
+    without = shape([c for c in default_transcript_checks() if not isinstance(c, Unique)])
+    assert (sorts, exchanges) == without[:2], plan[:4000]
 
 
 def test_tools_dim_broadcast_and_large_dims_smj(flagged_plan):

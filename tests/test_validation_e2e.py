@@ -250,3 +250,55 @@ def test_shared_runner_concurrent_inputs(spark, run):
     # the two inputs really differ (the clean one's only violations are
     # conversations the corrupted fixture's dim dropped)
     assert sequential[0][1] > sequential[1][1]
+
+
+def test_run_builds_no_check_expression(spark, run, monkeypatch):
+    """Every check expression is built by ``__init__``: with the check
+    methods and ``canonicalize`` made to raise after construction,
+    ``run`` and both outputs still succeed and equal an unpatched run."""
+    from hdfs_anomaly_detection_spark.constraints import TextEquals, dsl
+    from hdfs_anomaly_detection_spark.constraints import runner as runner_mod
+    from hdfs_anomaly_detection_spark.functions import text as text_mod
+
+    fx = run[0]
+    checks = default_transcript_checks() + [TextEquals("text_equals")]
+    # a raw-text reference: both texts are canonicalized after the join
+    reference = clean_transcripts(spark, FixtureConfig(n_conversations=300))
+
+    def outputs(runner):
+        res = runner.run(fx.fact)
+        try:
+            return sorted(map(tuple, res.violations.collect())), _verdicts_sorted(res)
+        finally:
+            res.unpersist()
+
+    def build():
+        return ValidationRunner(
+            checks,
+            n_buckets=N_BUCKETS,
+            dims={"conversations": fx.conversations, "tools": fx.tools},
+            reference=reference,
+        )
+
+    want = outputs(build())
+    runner = build()
+
+    def boom(*args, **kwargs):
+        raise AssertionError("check expression built after construction")
+
+    for cls in {dsl.Check, *map(type, checks)}:
+        monkeypatch.setattr(cls, "violation_expr", boom)
+        monkeypatch.setattr(cls, "detail_expr", boom)
+    monkeypatch.setattr(text_mod, "canonicalize", boom)
+    monkeypatch.setattr(runner_mod, "canonicalize", boom)
+    got_rows, got_verdicts = outputs(runner)
+    assert got_rows == want[0] and got_rows
+    pd.testing.assert_frame_equal(got_verdicts, want[1])
+
+
+def test_duplicate_check_names_rejected(spark):
+    # verdict rows are keyed by check_id, so two checks cannot share a name
+    from hdfs_anomaly_detection_spark.constraints import NotNull, Range
+
+    with pytest.raises(ValueError, match="duplicate check names"):
+        ValidationRunner([NotNull("c", column="text"), Range("c", column="turn_idx", min=0)])
