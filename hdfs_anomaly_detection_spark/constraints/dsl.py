@@ -140,7 +140,8 @@ class Unique(Check):
 
 @dataclass(frozen=True)
 class RefIntegrity(Check):
-    """FK column(s) must exist in a dimension table (runner-planned join).
+    """FK column(s) must exist in a dimension table (runner-planned
+    ``EXISTS`` subquery, executed as an existence join).
 
     Reference analogue: BlockId→Label dict probe + notna filter = left-anti
     semantics (``training/hdfs_line_level_loader_v2.py:32,66,69-72``).
@@ -148,11 +149,14 @@ class RefIntegrity(Check):
     leaves strategy to Catalyst/AQE (sort-merge for large dims).
     ``ignore_null=True``: null FKs don't violate (optional relationship).
 
-    NULL-key semantics (SQL FK semantics, pinned by tests): dim rows
-    with a NULL pk are dropped before the probe, and the join uses plain
-    equality — so a NULL fk never matches anything. With
-    ``ignore_null=False`` a NULL fk is therefore always flagged
-    dangling; with ``ignore_null=True`` it is never flagged.
+    A row is dangling iff no dim row has its fk. Existence ignores
+    duplicate pks, so the dim needs no deduplication.
+
+    NULL-key semantics (SQL FK semantics, pinned by tests): the probe
+    uses plain equality, so a dim row with a NULL pk never matches and a
+    NULL fk never matches anything. With ``ignore_null=False`` a NULL fk
+    is therefore always flagged dangling; with ``ignore_null=True`` it
+    is never flagged.
     """
 
     fk: tuple[str, ...] = ("conv_id",)
@@ -181,7 +185,16 @@ class MonotonicOrder(Check):
 class TextEquals(Check):
     """Per-turn text equality vs a reference copy under canonicalization,
     with stable (conv_id, turn_idx) ordering (the north-star per-row
-    invariant). Runner-planned (join vs reference table)."""
+    invariant). Runner-planned (``EXISTS`` subquery over the reference,
+    executed as an existence join).
+
+    A row is flagged iff its text is not null and SOME reference row
+    with its keys has a non-null text that differs (after
+    ``canonicalize`` when ``canonicalize``). A NULL key, a missing
+    reference row or a null text on either side never flags. A
+    reference with several rows per key therefore flags the row when any
+    of them differs, deterministically; with unique keys this is plain
+    equality against the one reference row."""
 
     column: str = "text"
     keys: tuple[str, ...] = ("conv_id", "turn_idx")

@@ -7,15 +7,15 @@ Plan shape (scale rationale):
   pmod(xxhash64(conv_id), n_buckets)`` — never a physical split, so
   verdicts are stable across cluster sizes / file layouts (SURVEY §7.4
   risk 1). All rows of a conversation land in one part_id.
-* All row-level predicates + referential joins + window flags are folded
+* All row-level predicates + existence flags + window flags are folded
   into ONE flagged scan; violation rows come from exploding a compacted
   struct array (rows with no failures are dropped by ``explode`` for
   free). No per-check scans.
 * Every per-check ``Column`` — the narrow-select predicates and details,
-  the part_id expression, the join conditions, the text gate, the
-  window flags, the explode structs and the verdict aggregates — is
-  built ONCE, in ``ValidationRunner.__init__``, into a frozen
-  ``Compiled`` value; ``run`` only binds it to an input, so a runner
+  the part_id expression, the ``EXISTS`` subqueries over the dims and
+  the reference, the window flags, the explode structs and the verdict
+  aggregates — is built ONCE, in ``ValidationRunner.__init__``, into a
+  frozen ``Compiled`` value; ``run`` only binds it to an input, so a runner
   needs an active Spark session when it is built. Spark 4 converts a
   ``Column`` into a Catalyst expression at each use, so the same objects
   serve every plan and thread. Building them costs thousands of Py4J
@@ -26,22 +26,33 @@ Plan shape (scale rationale):
   keeps no per-call state on the runner, so one runner can serve
   concurrent callers (e.g. ``foreachBatch`` threads).
 * When a check needs conversation locality (ordering windows, reference
-  equality, referential joins) the narrow frame is hash-repartitioned
-  once on conv_id; the reference-equality SMJ, dim joins, ordering and
-  uniqueness windows AND drift-metric histograms all ride that single
-  exchange (subset co-partitioning).
+  equality, referential integrity) the narrow frame is hash-repartitioned
+  once on conv_id; the reference-equality SMJ, the conversations-dim
+  SMJ, ordering and uniqueness windows AND drift-metric histograms all
+  ride that single exchange (subset co-partitioning).
+* Referential integrity and text equality only ask whether a matching
+  row EXISTS, so each is an ``EXISTS`` subquery flag, compiled once in
+  ``__init__``, that Spark plans as an ``ExistenceJoin``: no side is
+  deduplicated (no per-run ``HashAggregate``), and duplicate dim pks or
+  reference rows cannot multiply fact rows. The subqueries correlate on
+  runner-private aliases of the fk and key columns (``__fk{j}_k``,
+  ``__tk{t}_k``), added after the exchange: an outer ``conv_id`` would
+  be captured by the dim's own ``conv_id`` and silently un-correlate
+  the subquery. Measured on the perfbench ``full_suite`` (6k
+  conversations, 4-CPU host, traced op) against the dedup + left-join
+  plan: 12 → 9 jobs, 51 → 34 tasks, shuffle writes 4.54 → 3.11 MB.
 * Text equality is gated by a raw-text hash: the fact side carries
   ``xxhash64(text)`` and, when canonicalizing, the text itself through
-  that one exchange. After the (conv_id, turn_idx) SMJ only rows whose
-  raw hash differs from the reference's run the five-pass
-  ``canonicalize`` regex chain; the text is dropped in the projection
-  that computes the flags, so the persisted frame holds no text. A
-  raw-text reference is gated the same way: it carries its raw hash and
-  text through its own hash(conv_id) exchange and is canonicalized only
-  on those rows too. Measured on the perfbench ``full_suite`` (6k
-  conversations, 4-CPU host, traced op): scan-stage run time 1.87 →
-  0.25 s and executor CPU 2.69 → 1.09 s, for +68% shuffle bytes
-  (2.72 → 4.57 MB).
+  that one exchange. ``canonicalize`` is the last conjunct of the
+  existence join's residual condition, so only key-matched rows whose
+  raw hash differs from the reference's run the five-pass regex chain;
+  the text is dropped in the projection that computes the flags, so the
+  persisted frame holds no text. A raw-text reference is gated the same
+  way: it carries its raw hash and text through its own hash(conv_id)
+  exchange and is canonicalized only on those rows too. Measured on the
+  perfbench ``full_suite`` (6k conversations, 4-CPU host, traced op):
+  scan-stage run time 1.87 → 0.25 s and executor CPU 2.69 → 1.09 s, for
+  +68% shuffle bytes (2.72 → 4.57 MB).
 * One caching policy: every run persists the narrow frame
   (MEMORY_AND_DISK, ~50 B/row) and nothing else. Row violations,
   verdicts and drift histograms all read it, so the fact table is
@@ -53,7 +64,9 @@ Plan shape (scale rationale):
   of them, so a duplicate key gives one violation row. The window reuses
   the hash(conv_id) exchange and, for the default (conv_id, turn_idx)
   key, the sort of the reference SMJ and ordering window: no extra
-  shuffle, no extra sort. Without clustering, or for a key without
+  shuffle, no extra sort. A key of conv_id alone counts over the whole
+  conversation and marks ``row_number() = 1`` in turn_idx order, so it
+  reuses that sort too. Without clustering, or for a key without
   conv_id, uniqueness runs as a salted two-phase aggregation (partial
   counts per cached split → final merge) over the cached frame, so a
   hot key never concentrates on one reducer.
@@ -165,26 +178,6 @@ class _Item(NamedTuple):
     keep: Column | None  # the column after the joins; None: dropped there
 
 
-class _RefJoin(NamedTuple):
-    """The reference side of a TextEquals check."""
-
-    items: tuple[Column, ...]  # select over the reference
-    conv: str | None  # its conv_id column, to co-partition on
-    keys: tuple[str, ...]  # dedup keys
-    cond: Column
-
-
-class _DimJoin(NamedTuple):
-    """The dimension side of a RefIntegrity check."""
-
-    dim: str
-    items: tuple[Column, ...]  # select over the dimension
-    broadcast: bool
-    conv: bool  # shuffle the dimension once on conv_id
-    pk0: str
-    cond: Column
-
-
 class _Dupes(NamedTuple):
     """A Unique check counted by aggregation instead of a window."""
 
@@ -200,9 +193,8 @@ class Compiled(NamedTuple):
     narrow: tuple[_Item, ...]
     drift: tuple[tuple[str, str | None, str], ...]  # (check, need, metric column)
     clustered: bool
-    refs: tuple[_RefJoin, ...]
-    dims: tuple[_DimJoin, ...]
-    post: tuple[Column, ...]  # flags computed after the joins, windows included
+    outer: tuple[Column, ...]  # runner-private aliases the EXISTS subqueries correlate on
+    post: tuple[Column, ...]  # flags computed after the exchange: EXISTS and windows
     flags: tuple[tuple[Check, str], ...]
     explode: tuple[Column, ...]  # the select that explodes the failed checks
     violation: tuple[tuple[Column, ...], tuple[Column, ...]]  # around extra_cols
@@ -255,8 +247,10 @@ class ValidationRunner:
         same results, the old cost.
 
         Every check's ``Column`` expressions are built here, once, so a
-        runner needs an active Spark session. Check names must be
-        unique: verdict rows are keyed by check_id."""
+        runner needs an active Spark session, and ``dims`` must hold
+        every dim a RefIntegrity check names (``KeyError`` otherwise): the
+        ``EXISTS`` subqueries bind the dim and reference frames here.
+        Check names must be unique: verdict rows are keyed by check_id."""
         names = [c.name for c in checks]
         repeated = sorted({n for n in names if names.count(n) > 1})
         if repeated:
@@ -352,24 +346,26 @@ class ValidationRunner:
             narrow.append(item(metric.cast("double"), f"__dm{g}", need))
             drift.append((chk.name, need, f"__dm{g}"))
 
-        refs, post = self._compile_text(te_checks, flags)
-        dims: list[_DimJoin] = []
+        outer, post = self._compile_text(te_checks, flags)
         for j, chk in enumerate(ri_checks):
             col = f"__r{j}"
-            pk_cols = [f"__pk{j}_{k}" for k in range(len(chk.pk or chk.fk))]
-            dims.append(
-                _DimJoin(
-                    chk.dim,
-                    tuple(F.col(p).alias(a) for p, a in zip(chk.pk or chk.fk, pk_cols)),
-                    chk.broadcast,
-                    clustered and chk.fk == ("conv_id",),
-                    pk_cols[0],
-                    # plain equality keeps hash-partitioning reusable
-                    # (eqNullSafe keys get coalesce-wrapped ⇒ re-exchange)
-                    _all([F.col(fk) == F.col(pk) for fk, pk in zip(chk.fk, pk_cols)]),
-                )
+            # correlate on private aliases: an outer ``conv_id`` would be
+            # resolved against the dim's own conv_id, un-correlating it
+            fks = [f"__fk{j}_{k}" for k in range(len(chk.fk))]
+            pks = [f"__pk{j}_{k}" for k in range(len(chk.fk))]
+            outer += [F.col(c).alias(a) for c, a in zip(chk.fk, fks)]
+            side = self.dims[chk.dim].select(
+                *[F.col(c).alias(a) for c, a in zip(chk.pk or chk.fk, pks)]
             )
-            dangling = F.col(pk_cols[0]).isNull()
+            # plain equality keeps hash-partitioning reusable (eqNullSafe
+            # keys get coalesce-wrapped ⇒ re-exchange), and a NULL pk or
+            # fk never matches: SQL FK semantics
+            found = (
+                (F.broadcast(side) if chk.broadcast else side)
+                .where(_all([F.col(pk) == F.col(fk).outer() for pk, fk in zip(pks, fks)]))
+                .exists()
+            )
+            dangling = ~found
             if chk.ignore_null:
                 dangling = _all([F.col(fk).isNotNull() for fk in chk.fk] + [dangling])
             post.append(dangling.alias(col))
@@ -396,12 +392,18 @@ class ValidationRunner:
                 continue
             col = f"__u{k}"
             rest = [c for c in key if c != "conv_id"]
-            w = Window.partitionBy("conv_id").orderBy(*(rest or key))
-            n = F.count(F.lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
-            post += [
-                n.alias(f"{col}_n"),
-                ((n > 1) & (F.row_number().over(w) == F.rank().over(w))).alias(col),
-            ]
+            conv = Window.partitionBy("conv_id")
+            if rest:
+                w = conv.orderBy(*rest)
+                n = F.count(F.lit(1)).over(w.rangeBetween(Window.currentRow, Window.currentRow))
+                first = F.row_number().over(w) == F.rank().over(w)
+            else:
+                # ordering by conv_id inside its own partition would make
+                # Spark sort (conv_id, conv_id) again; turn_idx reuses the
+                # ordering window's sort
+                n = F.count(F.lit(1)).over(conv)
+                first = F.row_number().over(conv.orderBy("turn_idx")) == 1
+            post += [n.alias(f"{col}_n"), ((n > 1) & first).alias(col)]
             flags.append((chk, col))
 
         turn, no_turn = F.col("turn_idx"), F.lit(None).cast("int").alias("turn_idx")
@@ -460,8 +462,7 @@ class ValidationRunner:
             narrow=tuple(narrow),
             drift=tuple(drift),
             clustered=clustered,
-            refs=tuple(refs),
-            dims=tuple(dims),
+            outer=tuple(outer),
             post=tuple(post),
             flags=tuple(flags),
             explode=explode,
@@ -474,22 +475,29 @@ class ValidationRunner:
 
     def _compile_text(
         self, te_checks: list[TextEquals], flags: list[tuple[Check, str]]
-    ) -> tuple[list[_RefJoin], list[Column]]:
-        """The reference joins and raw-hash gates of the TextEquals checks.
+    ) -> tuple[list[Column], list[Column]]:
+        """The key aliases and reference ``EXISTS`` flags of the TextEquals
+        checks.
 
-        Gate: canonicalize is deterministic, so equal raw text has an
-        equal canonical hash. Only rows whose raw hash differs from the
-        reference's run the regex chain, above the SMJ. A pre-hashed
-        reference (``reference_hashes``) is compared by canonical hash —
-        a collision masking a true mismatch has probability ~2^-64; a
-        raw-text reference carries its text through its own exchange and
-        both texts are canonicalized on those rows only."""
+        A row is flagged iff some reference row with its keys has a
+        non-null raw text whose canonical form differs. Gate:
+        canonicalize is deterministic, so equal raw text has an equal
+        canonical hash; ``canonicalize`` is the last conjunct of the
+        existence join's residual condition, so the regex chain runs only
+        on key-matched rows whose raw hashes differ, above the SMJ. A
+        pre-hashed reference (``reference_hashes``) is compared by
+        canonical hash — a collision masking a true mismatch has
+        probability ~2^-64; a raw-text reference carries its text through
+        its own exchange and both texts are canonicalized on those rows
+        only."""
         ref_cols = set(self.reference.columns) if te_checks else set()
-        refs: list[_RefJoin] = []
+        outer: list[Column] = []
         gates: list[Column] = []
         for t, chk in enumerate(te_checks):
             src = F.col(chk.column)
-            keys = tuple(f"__ref{t}_{k}" for k in chk.keys)
+            keys = [f"__ref{t}_{k}" for k in chk.keys]
+            fact_keys = [f"__tk{t}_{k}" for k in chk.keys]
+            outer += [F.col(k).alias(a) for k, a in zip(chk.keys, fact_keys)]
             items = [F.col(k).alias(a) for k, a in zip(chk.keys, keys)]
             raw_text = chk.column in ref_cols
             if raw_text:
@@ -506,33 +514,23 @@ class ValidationRunner:
                     f"{chk.column!r} column nor a raw_hash column; rebuild a "
                     "pre-hashed reference with reference_hashes()"
                 )
-            refs.append(
-                _RefJoin(
-                    tuple(items),
-                    # co-partition the reference on the same key so BOTH
-                    # its dedup and the equality join stay exchange-free
-                    f"__ref{t}_conv_id" if "conv_id" in chk.keys else None,
-                    keys,
-                    # plain equality, not eqNullSafe: NULL keys never match
-                    # a reference row either way (left join ⇒ ref hashes
-                    # null ⇒ no flag), and <=> keys get coalesce-wrapped by
-                    # the planner, which breaks hash-partitioning reuse and
-                    # forces the SMJ + downstream window to re-exchange
-                    _all([F.col(k) == F.col(a) for k, a in zip(chk.keys, keys)]),
-                )
-            )
-            raw, ref_raw = F.col(f"__te{t}_h"), F.col(f"__ref{t}_raw")
-            differs = ref_raw.isNotNull() & raw.isNotNull() & (raw != ref_raw)
+            raw, ref_raw = F.col(f"__te{t}_h").outer(), F.col(f"__ref{t}_raw")
+            # plain equality, not eqNullSafe: a NULL key never matches a
+            # reference row either way, and <=> keys get coalesce-wrapped
+            # by the planner, which breaks hash-partitioning reuse and
+            # forces the SMJ + downstream window to re-exchange
+            cond = [F.col(k) == F.col(a).outer() for k, a in zip(keys, fact_keys)]
+            cond += [ref_raw.isNotNull(), raw.isNotNull(), raw != ref_raw]
             if chk.canonicalize:
-                canon = canonicalize(F.col(f"__te{t}_x"))
+                canon = canonicalize(F.col(f"__te{t}_x").outer())
                 if raw_text:
-                    unequal = canon != canonicalize(F.col(f"__ref{t}_x"))
+                    cond.append(canon != canonicalize(F.col(f"__ref{t}_x")))
                 else:
-                    unequal = F.xxhash64(canon) != F.col(f"__ref{t}_canon")
-                differs = F.when(differs, unequal).otherwise(False)
+                    cond.append(F.xxhash64(canon) != F.col(f"__ref{t}_canon"))
+            differs = self.reference.select(*items).where(_all(cond)).exists()
             gates.append(differs.alias(f"__t{t}"))
             flags.append((chk, f"__t{t}"))
-        return refs, gates
+        return outer, gates
 
     @staticmethod
     def _compile_dupes(chk: Unique, count_col: str) -> _Dupes:
@@ -560,20 +558,22 @@ class ValidationRunner:
         one measured exception: a canonicalizing TextEquals check
         carries its text through the fact-side hash(conv_id) exchange,
         so that only rows whose raw hash differs from the reference are
-        canonicalized after the SMJ (−59% executor CPU for +68% shuffle
-        bytes, see the module docstring).
+        canonicalized in the existence join's residual condition (−59%
+        executor CPU for +68% shuffle bytes, see the module docstring).
 
-        Stage B: referential joins, then ONE select that computes every
-        join flag and the ordering and uniqueness windows and drops the
-        join helpers and the text. When a check needs conversation
-        locality, the frame is hash-repartitioned ONCE on conv_id and
-        every downstream operator — the reference-equality join on
-        (conv_id, turn_idx), the conversations-dim join on conv_id, and
-        the windows — rides that single exchange (subset co-partitioning
-        via ``spark.sql.requireAllClusterKeysForCoPartition=false``; the
+        Stage B: when a check needs conversation locality, the frame is
+        hash-repartitioned ONCE on conv_id; a select adds the private
+        fk/key aliases the subqueries correlate on, and ONE more select
+        computes every ``EXISTS`` flag (planned as existence joins) and
+        the ordering and uniqueness windows and drops the aliases, the
+        raw hashes and the text. Every downstream operator — the
+        reference-equality join on (conv_id, turn_idx), the
+        conversations-dim join on conv_id, and the windows — rides that
+        single exchange (subset co-partitioning via
+        ``spark.sql.requireAllClusterKeysForCoPartition=false``; the
         windows even reuse the SMJ sort because conv_id,turn_idx ordering
-        is a prefix of their requirement). Measured at 9M rows this
-        removes one full-frame exchange + one sort vs the naive plan.
+        is a prefix of their requirement). No dim or reference side is
+        deduplicated, repartitioned or left-joined per run.
 
         Precomputed detail columns ride along as ``<flag_col>_d``.
         """
@@ -585,36 +585,20 @@ class ValidationRunner:
         if not c.clustered:
             return FlagPlan(df, c.flags, False, drift_cols)
 
-        # single-exchange clustering: everything below (reference join,
-        # dim joins on conv_id, windows, ref-side dedup) rides ONE
+        # single-exchange clustering: everything below (existence joins
+        # on conv_id or (conv_id, turn_idx), windows) rides ONE
         # hash(conv_id) repartition; subset co-partitioning lets the
         # (conv_id, turn_idx) SMJ reuse it
         # NOTE: subset co-partitioning relies on
         # spark.sql.requireAllClusterKeysForCoPartition=false, set ONCE in
         # session.get_spark (not here — mutating session conf mid-plan
         # would leak into unrelated queries on a shared session)
-        n_shuffle = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         if not self.pre_clustered:
+            n_shuffle = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
             df = df.repartition(n_shuffle, "conv_id")
-        for ref in c.refs:
-            side = self.reference.select(*ref.items)
-            if ref.conv:
-                side = side.repartition(n_shuffle, ref.conv)
-            df = df.join(side.dropDuplicates(list(ref.keys)), ref.cond, "left")
-        for d in c.dims:
-            side = self.dims[d.dim].select(*d.items)
-            if d.broadcast:
-                side = F.broadcast(side.dropDuplicates())
-            elif d.conv:
-                # dim shuffles once on conv_id; the fact side is
-                # already there, so this SMJ adds no fact-side exchange
-                # (and its conv_id sort is a prefix of the TE-join sort)
-                side = side.repartition(n_shuffle, d.pk0).dropDuplicates()
-            else:
-                side = side.dropDuplicates()
-            # SQL FK semantics: a NULL pk never matches (null dim rows are
-            # dropped)
-            df = df.join(side.na.drop(subset=[d.pk0]), d.cond, "left")
+        if c.outer:
+            # after the exchange, so the aliases do not widen the shuffle
+            df = df.select("*", *c.outer)
         df = df.select(*[it.keep for it in items if it.keep is not None], *c.post)
         return FlagPlan(df, c.flags, True, drift_cols)
 

@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.constraints import (
+    RefIntegrity,
     TextEquals,
     Unique,
     ValidationRunner,
@@ -96,13 +97,23 @@ def flagged_plan(te_flagged):
 
 
 def test_single_full_frame_exchange(flagged_plan):
-    # fact 1x + ref-hashes 1x + conversations dim 1x + 12-row tools dedup;
-    # the ref-equality SMJ, conv-dim SMJ, and ordering window must NOT add
-    # exchanges of their own
+    # fact 1x + ref-hashes 1x + conversations dim 1x; the ref-equality
+    # and conv-dim existence joins and the windows must NOT add exchanges
+    # of their own, and the broadcast tools dim needs no dedup shuffle
     n_shuffles = len(re.findall(r"(?<!Broadcast)(?<!Reused)Exchange hash", flagged_plan)) + len(
         re.findall(r"Exchange RoundRobin", flagged_plan)
     )
-    assert n_shuffles <= 4, f"plan regressed to {n_shuffles} shuffles:\n{flagged_plan[:4000]}"
+    assert n_shuffles <= 3, f"plan regressed to {n_shuffles} shuffles:\n{flagged_plan[:4000]}"
+
+
+def test_existence_joins_without_dedup_aggregate(flagged_plan):
+    # every RefIntegrity and TextEquals check is one existence join; no
+    # side is deduplicated by an aggregate first
+    n_checks = sum(
+        isinstance(c, (RefIntegrity, TextEquals)) for c in default_transcript_checks()
+    ) + 1  # text_equals
+    assert flagged_plan.count("ExistenceJoin(") == n_checks, flagged_plan[:4000]
+    assert "HashAggregate" not in flagged_plan, flagged_plan[:4000]
 
 
 def test_no_text_column_in_exchanges(spark, fixture):
@@ -221,10 +232,13 @@ def test_unique_window_adds_no_sort_or_exchange(spark, fixture):
         _, plan = _flag_plan(spark, ValidationRunner(checks, n_buckets=8, dims=dims), fx.fact)
         return plan.toString().count("Sort ["), len(_exchanges(plan)), plan.toString()
 
-    sorts, exchanges, plan = shape(default_transcript_checks())
-    assert "rank(" in plan  # the Unique check is a window flag here
     without = shape([c for c in default_transcript_checks() if not isinstance(c, Unique)])
-    assert (sorts, exchanges) == without[:2], plan[:4000]
+    # the default (conv_id, turn_idx) key, and a key of conv_id alone,
+    # whose window must not sort (conv_id, conv_id) again
+    for extra in ([], [Unique("unique_conv", columns=("conv_id",))]):
+        sorts, exchanges, plan = shape(default_transcript_checks() + extra)
+        assert "rank(" in plan  # the Unique check is a window flag here
+        assert (sorts, exchanges) == without[:2], plan[:4000]
 
 
 def test_tools_dim_broadcast_and_large_dims_smj(flagged_plan):

@@ -26,7 +26,8 @@ from hdfs_anomaly_detection_spark.streaming import (
 @pytest.fixture()
 def staged(spark, tmp_path):
     cfg = FixtureConfig(
-        n_conversations=120, null_text_rate=0.05, bad_role_rate=0.03, dangling_tool_rate=0.1
+        n_conversations=120, null_text_rate=0.05, bad_role_rate=0.03, dangling_tool_rate=0.1,
+        dangling_conv_rate=0.05,
     )
     fx = build_fixture(spark, cfg)
     path = str(tmp_path / "stream_in")
@@ -43,9 +44,17 @@ CHECKS = [
 
 def test_stream_violations_match_batch(spark, staged):
     fx, path = staged
+    # ref_conv adds a stream-static existence join on conv_id
+    # (sort-merge: the dim is not hinted) next to the broadcast tools probe
+    checks = CHECKS + [
+        RefIntegrity(
+            "ref_conv", fk=("conv_id",), dim="conversations", pk=("conv_id",), broadcast=False
+        )
+    ]
+    dims = {"tools": fx.tools, "conversations": fx.conversations}
     schema = fx.fact.schema
     stream = spark.readStream.schema(schema).parquet(path)
-    viol_stream = streaming_violations(stream, CHECKS, dims={"tools": fx.tools})
+    viol_stream = streaming_violations(stream, checks, dims=dims)
 
     q = (
         viol_stream.writeStream.outputMode("append")
@@ -59,13 +68,13 @@ def test_stream_violations_match_batch(spark, staged):
         q.stop()
     got = spark.sql("SELECT part_id, check_id, conv_id, turn_idx FROM viols").toPandas()
 
-    batch = ValidationRunner(CHECKS, dims={"tools": fx.tools}).run(fx.fact)
+    batch = ValidationRunner(checks, dims=dims).run(fx.fact)
     exp = batch.violations.select("part_id", "check_id", "conv_id", "turn_idx").toPandas()
     key = ["part_id", "check_id", "conv_id", "turn_idx"]
     assert sorted(map(tuple, got[key].values.tolist())) == sorted(
         map(tuple, exp[key].values.tolist())
     )
-    assert len(got) > 0
+    assert set(got["check_id"]) == {c.name for c in checks}
 
 
 def test_windowed_counts(spark, staged):
