@@ -3,8 +3,9 @@
 A from-scratch engine (NOT a port) with the query / data-processing
 capabilities of the reference repo ``hasb73/hdfs-anomaly-detection``:
 declarative constraint DSL compiled to Catalyst predicates, per-column
-stats (null-rate, min/max, HLL distinct, length histograms), salted
-uniqueness, referential integrity via broadcast / sort-merge joins,
+stats (null-rate, min/max, HLL distinct, length histograms),
+per-conversation uniqueness windows, referential integrity via
+existence joins (broadcast or sort-merge),
 distribution-drift checks (KS / PSI over mergeable log-bucket histograms),
 per-partition pass/fail verdicts with exact violation rows, and a
 manifest-table checkpoint for idempotent resume.

@@ -8,9 +8,9 @@ threshold verdicts in its SQL corpus
 ``cloud-deployment/spark_job.py:103``. Here each constraint is a small
 dataclass that compiles to a ``pyspark.sql.Column`` boolean (True ⇒ the
 row VIOLATES) plus a human-readable detail expression. Checks that need
-a shuffle (uniqueness), a join (referential integrity, text equality) or
-a window (ordering) declare that instead of a row predicate; the runner
-plans them.
+a join (referential integrity, text equality) or a window over the
+conversation (uniqueness, ordering) declare that instead of a row
+predicate; the runner plans them.
 
 Everything row-level stays inside whole-stage codegen — zero Python in
 the hot path (``input_hint`` mandate: no per-row Python).
@@ -124,18 +124,19 @@ class Regex(Check):
 
 @dataclass(frozen=True)
 class Unique(Check):
-    """Key uniqueness (runner-planned). On a frame clustered by conv_id
-    and a key that contains conv_id it is a window flag over the
-    conversation (one violation row per duplicate key, on its first
-    row); otherwise a two-phase hash aggregation, salted by input split
-    when ``salted``.
+    """Key uniqueness (runner-planned): a window flag over the
+    conversation, one violation row per duplicate key, on its first row.
+
+    The key must contain conv_id (``ValidationRunner`` raises
+    ``ValueError`` otherwise): ``part_id`` is a function of conv_id, so
+    only such a key has all its duplicates in one partition and can be
+    decided there.
 
     Reference analogue: md5-content-hash dedup / skip-if-seen
     (``anomaly-detection-service/anomaly_detection_service.py:269-271,668-678``).
     """
 
     columns: tuple[str, ...] = ("conv_id", "turn_idx")
-    salted: bool = True
 
 
 @dataclass(frozen=True)

@@ -18,18 +18,21 @@ Plan shape (scale rationale):
   frozen ``Compiled`` value; ``run`` only binds it to an input, so a runner
   needs an active Spark session when it is built. Spark 4 converts a
   ``Column`` into a Catalyst expression at each use, so the same objects
-  serve every plan and thread. Building them costs thousands of Py4J
-  round trips, which ``run`` used to repeat on every call.
+  serve every plan and thread. Building them costs 1,400–2,000 Py4J
+  round trips for the default suite with dims and a reference (about
+  three times that with the call-site capture ``session.get_spark``
+  turns off), so ``run`` must not repeat it.
 * The plan for one input is a value (``FlagPlan``): the narrow flagged
-  frame, its flag columns, whether it is clustered and which columns
-  carry drift metrics. ``run`` derives every output from that value and
-  keeps no per-call state on the runner, so one runner can serve
-  concurrent callers (e.g. ``foreachBatch`` threads).
-* When a check needs conversation locality (ordering windows, reference
-  equality, referential integrity) the narrow frame is hash-repartitioned
-  once on conv_id; the reference-equality SMJ, the conversations-dim
-  SMJ, ordering and uniqueness windows AND drift-metric histograms all
-  ride that single exchange (subset co-partitioning).
+  frame, its flag columns and which columns carry drift metrics.
+  ``run`` derives every output from that value and keeps no per-call
+  state on the runner, so one runner can serve concurrent callers
+  (e.g. ``foreachBatch`` threads).
+* When a check needs conversation locality (ordering and uniqueness
+  windows, reference equality, referential integrity) the narrow frame
+  is hash-repartitioned once on conv_id; the reference-equality SMJ,
+  the conversations-dim SMJ, ordering and uniqueness windows AND
+  drift-metric histograms all ride that single exchange (subset
+  co-partitioning).
 * Referential integrity and text equality only ask whether a matching
   row EXISTS, so each is an ``EXISTS`` subquery flag, compiled once in
   ``__init__``, that Spark plans as an ``ExistenceJoin``: no side is
@@ -57,30 +60,29 @@ Plan shape (scale rationale):
   (MEMORY_AND_DISK, ~50 B/row) and nothing else. Row violations,
   verdicts and drift histograms all read it, so the fact table is
   scanned once per run.
-* Every count check is a flag column. On a clustered frame a Unique key
-  that contains conv_id is counted by a window over the conversation
-  ordered by the rest of the key: ``count(*)`` over the peer rows (the
-  key's duplicates) and ``row_number() = rank()``, which marks the first
-  of them, so a duplicate key gives one violation row. The window reuses
-  the hash(conv_id) exchange and, for the default (conv_id, turn_idx)
-  key, the sort of the reference SMJ and ordering window: no extra
-  shuffle, no extra sort. A key of conv_id alone counts over the whole
-  conversation and marks ``row_number() = 1`` in turn_idx order, so it
-  reuses that sort too. Without clustering, or for a key without
-  conv_id, uniqueness runs as a salted two-phase aggregation (partial
-  counts per cached split → final merge) over the cached frame, so a
-  hot key never concentrates on one reducer.
+* Every count check is a flag column. A Unique key must contain conv_id
+  (``part_id`` is a function of conv_id, so only such a key can be
+  decided within a partition); it is counted by a window over the
+  conversation ordered by the rest of the key: ``count(*)`` over the
+  peer rows (the key's duplicates) and ``row_number() = rank()``, which
+  marks the first of them, so a duplicate key gives one violation row.
+  The window reuses the hash(conv_id) exchange and, for the default
+  (conv_id, turn_idx) key, the sort of the reference SMJ and ordering
+  window: no extra shuffle, no extra sort. A key of conv_id alone counts
+  over the whole conversation and marks ``row_number() = 1`` in turn_idx
+  order, so it reuses that sort too. A Unique-only suite clusters as
+  well, so each conversation is counted in one task.
 * Verdicts = ONE ``groupBy(part_id)`` over the persisted frame:
   ``count(*)`` as n_rows, ``count_if`` of every flag and the max
   timestamp of every Freshness check, unpivoted (an ``Expand``: no
-  join, no generator) into one row per (part_id, check). Only salted
-  Unique counts join in, on part_id. Nothing driver-side is proportional
-  to row count. The small driver-side tables (schema-conformance rows,
-  drift verdict rows, the empty outputs of a suite without flags) are
-  Arrow-backed ``LocalRelation``s (``session.local_frame``), never
-  pickled Python lists: reading them starts no Python worker, and
-  Catalyst folds them — a drift-only run's verdicts plan is a single
-  ``LocalRelation`` and collects without a Spark job.
+  join, no generator) into one row per (part_id, check). Nothing
+  driver-side is proportional to row count. The small driver-side
+  tables (schema-conformance rows, drift verdict rows, the empty
+  outputs of a suite without flags) are Arrow-backed ``LocalRelation``s
+  (``session.local_frame``), never pickled Python lists: reading them
+  starts no Python worker, and Catalyst folds them — a drift-only run's
+  verdicts plan is a single ``LocalRelation`` and collects without a
+  Spark job.
 
 The per-row verdict record mirrors the reference's ``AnomalyResult``
 (``anomaly-detection-service/anomaly_detection_service.py:58-68``); the
@@ -166,7 +168,6 @@ class FlagPlan(NamedTuple):
 
     frame: DataFrame  # the narrow flagged frame
     flags: tuple[tuple[Check, str], ...]  # (check, flag column)
-    clustered: bool  # frame is hash-partitioned on conv_id
     drift_cols: dict[str, str]  # drift check name → metric column
 
 
@@ -176,14 +177,6 @@ class _Item(NamedTuple):
     expr: Column  # the select item, aliased
     need: str | None  # the fact column it needs, None: always selected
     keep: Column | None  # the column after the joins; None: dropped there
-
-
-class _Dupes(NamedTuple):
-    """A Unique check counted by aggregation instead of a window."""
-
-    check: Unique
-    items: tuple[Column, ...]  # VIOLATIONS_SCHEMA select over the key totals
-    count_col: str  # its per-partition count, joined into the verdicts
 
 
 class Compiled(NamedTuple):
@@ -198,7 +191,6 @@ class Compiled(NamedTuple):
     flags: tuple[tuple[Check, str], ...]
     explode: tuple[Column, ...]  # the select that explodes the failed checks
     violation: tuple[tuple[Column, ...], tuple[Column, ...]]  # around extra_cols
-    dupes: tuple[_Dupes, ...]
     aggs: tuple[Column, ...]  # the one verdict aggregate
     verdicts: tuple[Column, ...]  # a _VERDICT struct per count check
     fresh: tuple[tuple[Freshness, str], ...]  # (check, max-ts column)
@@ -250,11 +242,18 @@ class ValidationRunner:
         runner needs an active Spark session, and ``dims`` must hold
         every dim a RefIntegrity check names (``KeyError`` otherwise): the
         ``EXISTS`` subqueries bind the dim and reference frames here.
-        Check names must be unique: verdict rows are keyed by check_id."""
+        Check names must be unique: verdict rows are keyed by check_id.
+        A Unique key must contain conv_id."""
         names = [c.name for c in checks]
         repeated = sorted({n for n in names if names.count(n) > 1})
         if repeated:
             raise ValueError(f"duplicate check names {repeated}: verdict rows are keyed by check_id")
+        for chk in dsl.of_type(checks, Unique):
+            if "conv_id" not in chk.columns:
+                raise ValueError(
+                    f"Unique {chk.name!r}: key {tuple(chk.columns)} lacks conv_id; part_id is "
+                    "a function of conv_id, so only such keys can be decided within a partition"
+                )
         self.checks = checks
         self.n_buckets = n_buckets
         self.dims = dims or {}
@@ -284,7 +283,7 @@ class ValidationRunner:
         drift_checks = dsl.of_type(self.checks, Drift)
         fresh_checks = dsl.of_type(self.checks, Freshness)
         unique_checks = dsl.of_type(self.checks, Unique)
-        clustered = bool(mono_checks or te_checks or ri_checks)
+        clustered = bool(mono_checks or te_checks or ri_checks or unique_checks)
 
         extra: set[str] = set()
         for chk in mono_checks:
@@ -384,14 +383,9 @@ class ValidationRunner:
             flags.append((chk, col))
         # after the ordering windows, so their (conv_id, turn_idx, ...) sort
         # also serves the Unique window's (conv_id, turn_idx) requirement
-        dupes: list[_Dupes] = []
         for k, chk in enumerate(unique_checks):
-            key = tuple(chk.columns)
-            if not (clustered and "conv_id" in key):
-                dupes.append(self._compile_dupes(chk, f"__s{k}"))
-                continue
             col = f"__u{k}"
-            rest = [c for c in key if c != "conv_id"]
+            rest = [c for c in chk.columns if c != "conv_id"]
             conv = Window.partitionBy("conv_id")
             if rest:
                 w = conv.orderBy(*rest)
@@ -435,7 +429,6 @@ class ValidationRunner:
         )
 
         flag_of = {chk.name: col for chk, col in flags}
-        counted_of = {d.check.name: d.count_col for d in dupes}
         n_rows, null, zero = F.col("n_rows"), F.lit(None), F.lit(0)
         aggs = [F.count(F.lit(1)).alias("n_rows")]
         verdicts = []
@@ -446,8 +439,6 @@ class ValidationRunner:
             if chk.name in flag_of:
                 aggs.append(F.count_if(F.col(flag_of[chk.name])).alias(f"__c{i}"))
                 n = F.col(f"__c{i}")
-            elif chk.name in counted_of:
-                n = F.coalesce(F.col(counted_of[chk.name]), zero)
             else:  # nothing to count, e.g. TextEquals without a reference
                 n = zero
             passed = n <= float(chk.max_violation_rate) * n_rows
@@ -467,7 +458,6 @@ class ValidationRunner:
             flags=tuple(flags),
             explode=explode,
             violation=violation,
-            dupes=tuple(dupes),
             aggs=tuple(aggs),
             verdicts=tuple(verdicts),
             fresh=tuple(fresh),
@@ -532,19 +522,6 @@ class ValidationRunner:
             flags.append((chk, f"__t{t}"))
         return outer, gates
 
-    @staticmethod
-    def _compile_dupes(chk: Unique, count_col: str) -> _Dupes:
-        key = tuple(chk.columns)
-        items = (
-            F.col("__pid").alias("part_id"),
-            F.lit(chk.name).alias("check_id"),
-            (F.col("conv_id") if "conv_id" in key else F.lit(None)).cast("string").alias("conv_id"),
-            (F.col("turn_idx") if "turn_idx" in key else F.lit(None)).cast("int").alias("turn_idx"),
-            F.lit(",".join(key)).alias("column"),
-            F.format_string("duplicate key count=%s", F.col("__n").cast("string")).alias("detail"),
-        )
-        return _Dupes(chk, items, count_col)
-
     # ------------------------------------------------------------------ plan
 
     def _flagged(self, fact: DataFrame) -> FlagPlan:
@@ -583,7 +560,7 @@ class ValidationRunner:
         df = fact.select(*[it.expr for it in items])  # ← the narrow frame
         drift_cols = {name: col for name, need, col in c.drift if need is None or need in fact_cols}
         if not c.clustered:
-            return FlagPlan(df, c.flags, False, drift_cols)
+            return FlagPlan(df, c.flags, drift_cols)
 
         # single-exchange clustering: everything below (existence joins
         # on conv_id or (conv_id, turn_idx), windows) rides ONE
@@ -600,7 +577,7 @@ class ValidationRunner:
             # after the exchange, so the aliases do not widen the shuffle
             df = df.select("*", *c.outer)
         df = df.select(*[it.keep for it in items if it.keep is not None], *c.post)
-        return FlagPlan(df, c.flags, True, drift_cols)
+        return FlagPlan(df, c.flags, drift_cols)
 
     def _detail(self, chk: Check, flag_col: str) -> F.Column:
         if isinstance(chk, RefIntegrity):
@@ -645,29 +622,6 @@ class ValidationRunner:
         head, tail = c.violation
         return flagged.select(*c.explode, *extra).select(*head, *extra, *tail)
 
-    def _unique_violations(self, flagged: DataFrame) -> list[tuple[str, DataFrame]]:
-        """(count column, duplicate keys) of every Unique check that is
-        not a window flag: the frame is not clustered or the key lacks
-        conv_id. Counted over the persisted narrow frame (every Unique
-        key column rides it), so uniqueness adds no fact scan; a salted
-        check runs the two-phase aggregation (partial counts per cached
-        split → final merge) that the hot-key skew tests exercise."""
-        out = []
-        if not self._compiled.dupes:
-            return out
-        src = flagged.withColumnRenamed("part_id", "__pid")
-        for d in self._compiled.dupes:
-            key = d.check.columns
-            if d.check.salted:
-                partial = src.groupBy(
-                    "__pid", *key, F.spark_partition_id().alias("__salt")
-                ).agg(F.count(F.lit(1)).alias("__c"))
-                totals = partial.groupBy("__pid", *key).agg(F.sum("__c").alias("__n"))
-            else:
-                totals = src.groupBy("__pid", *key).agg(F.count(F.lit(1)).alias("__n"))
-            out.append((d.count_col, totals.filter(F.col("__n") > 1).select(*d.items)))
-        return out
-
     # ------------------------------------------------------------------ run
 
     def run(self, fact: DataFrame) -> ValidationResult:
@@ -696,10 +650,6 @@ class ValidationRunner:
             )
         if values:
             counts = flagged.groupBy("part_id").agg(*c.aggs)
-            for col, dupes in self._unique_violations(flagged):
-                violations = violations.unionByName(dupes)
-                n = dupes.groupBy("part_id").agg(F.count(F.lit(1)).alias(col))
-                counts = counts.join(n, "part_id", "left")
             verdicts = counts.unpivot("part_id", values, "__check", "v").select("part_id", "v.*")
         else:
             verdicts = local_frame(spark, [], VERDICTS_SCHEMA)

@@ -89,6 +89,12 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
         .config("spark.ui.enabled", "false")
+        # PySpark 4's call-site capture costs ~10 Py4J round trips per
+        # Column operation (active-session lookup, conf read, JVM origin
+        # set/clear, inspect.stack), two thirds of a runner build; the
+        # price is that a DataFrame error's query context no longer names
+        # the Python call site
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -127,6 +127,7 @@ def main() -> None:
     # in the SMJ's residual condition.
     from hdfs_anomaly_detection_spark.constraints import (
         TextEquals,
+        Unique,
         ValidationRunner,
         default_transcript_checks,
     )
@@ -166,6 +167,20 @@ def main() -> None:
           "ref_conv, ref_tool, text_equals; no HashAggregate)")
     print(f"- {'✅' if n_bc >= 1 else '❌'} tools dim broadcast ({n_bc} BroadcastExchange)")
     print(f"- {'✅' if 'SortMergeJoin' in plan else '❌'} large dims via SortMergeJoin")
+    print("\n```\n" + plan[:3000] + ("\n… (truncated)" if len(plan) > 3000 else "") + "\n```\n")
+
+    # a Unique-only suite clusters for its window flag like any other
+    # conversation check: one hash(conv_id) exchange, no key aggregate
+    unique = ValidationRunner([Unique("unique_turn")], n_buckets=8)
+    plan = plan_of(unique._flagged(fx.fact).frame)
+    fmt = plan.split("== Physical Plan ==")[1]
+    parts = re.findall(r"^Arguments: (hashpartitioning\([^)]*\)|RoundRobin.*)", fmt, re.M)
+    one = len(parts) == 1 and parts[0].startswith("hashpartitioning(conv_id")
+    print("## Unique-only suite (window flag, no key aggregate)\n")
+    print(f"- {'✅' if one else '❌'} one hash(conv_id) exchange ({', '.join(parts) or 'none'})")
+    print(f"- {'✅' if 'Window' in fmt else '❌'} duplicate count is a window (`Window`)")
+    print(f"- {'✅' if 'HashAggregate' not in fmt else '❌'} "
+          "no aggregate over the key (`ABSENT: HashAggregate`)")
     print("\n```\n" + plan[:3000] + ("\n… (truncated)" if len(plan) > 3000 else "") + "\n```\n")
     for name, wants in audits.items():
         df = driver_queries.QUERIES[name](spark, sf_dir)

@@ -361,7 +361,7 @@ def main() -> None:
         f.write(f"""# BENCH — Two-parallelism scaling evidence (north_rule criterion)
 
 Identical full-constraint validation job (null/domain/range checks,
-salted uniqueness, referential integrity vs 2 dims, ordering window,
+uniqueness window, referential integrity vs 2 dims, ordering window,
 per-turn text-equality invariant vs precomputed reference hashes) over
 the same cached {rows:,}-turn corrupted transcripts parquet, at two
 pinned parallelism levels (`taskset -c 0-(N-1) … local[N]`, shuffle

@@ -1,4 +1,4 @@
-"""Skew handling: salted uniqueness across many input splits, hot-key
+"""Skew handling: a hot uniqueness key across many input splits, hot-key
 detection, and size-aware repartitioning."""
 
 from __future__ import annotations
@@ -12,10 +12,11 @@ from hdfs_anomaly_detection_spark.plans.partitioning import (
 )
 
 
-def test_salted_unique_counts_hot_key_exactly(spark):
+def test_unique_counts_hot_key_exactly(spark):
     """One key duplicated 10k times, spread over 32 input splits: the
-    two-phase salted aggregation must report count=10000 exactly (salt
-    boundaries must not split or double-count)."""
+    Unique window over its conversation, after the hash(conv_id)
+    exchange gathers the splits, must report count=10000 exactly, on one
+    violation row."""
     hot = spark.range(10_000).select(
         F.lit("conv_hot").alias("conv_id"), F.lit(7).alias("turn_idx")
     )
@@ -29,25 +30,6 @@ def test_salted_unique_counts_hot_key_exactly(spark):
     assert len(viol) == 1
     assert viol.iloc[0]["conv_id"] == "conv_hot"
     assert viol.iloc[0]["detail"] == "duplicate key count=10000"
-
-
-def test_salted_equals_unsalted(spark):
-    df = spark.range(5000).select(
-        F.format_string("conv_%d", F.pmod(F.col("id"), F.lit(700))).alias("conv_id"),
-        F.pmod(F.col("id"), F.lit(5)).cast("int").alias("turn_idx"),
-    )
-    a = (
-        ValidationRunner([Unique("u", salted=True)], n_buckets=8)
-        .run(df).violations.toPandas()
-    )
-    b = (
-        ValidationRunner([Unique("u", salted=False)], n_buckets=8)
-        .run(df).violations.toPandas()
-    )
-    key = ["conv_id", "turn_idx", "detail"]
-    assert sorted(map(tuple, a[key].values.tolist())) == sorted(
-        map(tuple, b[key].values.tolist())
-    )
 
 
 def test_hot_conversation_detection(spark):

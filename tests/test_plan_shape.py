@@ -299,15 +299,16 @@ def test_drift_rides_narrow_frame(spark, tmp_path, monkeypatch):
     res.unpersist()
 
 
-def _fact_scans(spark, *dfs) -> int:
-    """File-scan nodes in the physical plans of ``dfs``, through adaptive
-    wrappers, query stages and cached relations, counting each cached
-    relation once (its plan is shared by every scan of the cache)."""
+def _plan_nodes(spark, *dfs):
+    """Every physical-plan node of ``dfs``, through adaptive wrappers,
+    query stages and cached relations, visiting each cached relation
+    once (its plan is shared by every scan of the cache)."""
     identity = spark._jvm.System.identityHashCode
-    n, seen = 0, set()
+    seen = set()
     stack = [df._jdf.queryExecution().executedPlan() for df in dfs]
     while stack:
         node = stack.pop()
+        yield node
         name = node.nodeName()
         if name == "AdaptiveSparkPlan":
             stack.append(node.executedPlan())
@@ -318,25 +319,36 @@ def _fact_scans(spark, *dfs) -> int:
             if identity(builder) not in seen:
                 seen.add(identity(builder))
                 stack.append(builder.cachedPlan())
-        elif node.getClass().getSimpleName() == "FileSourceScanExec":
-            n += 1
         kids = node.children()
         stack.extend(kids.apply(i) for i in range(kids.size()))
-    return n
 
 
-def test_unclustered_unique_scans_fact_once(spark, tmp_path):
-    """A Unique-only suite needs no exchange, so its frame is not
-    clustered; the salted duplicate count must still read the persisted
-    narrow frame (the key columns ride it), not re-scan the fact table."""
-    from hdfs_anomaly_detection_spark.constraints import Unique
-
+def test_unique_only_suite_is_one_window(spark, tmp_path):
+    """A Unique-only suite clusters like any conversation check: one
+    fact scan, one hash(conv_id) exchange under the window flag, and no
+    aggregate keyed on the Unique columns; its violation rows equal a
+    direct groupBy count."""
     fx = build_fixture(spark, FixtureConfig(n_conversations=50, dup_rate=0.05))
     path = str(tmp_path / "fact")
     fx.fact.write.parquet(path)
     fact = spark.read.parquet(path)
-    res = ValidationRunner([Unique("u")], n_buckets=4).run(fact)
-    assert _fact_scans(spark, res.violations, res.verdicts) == 1
+    runner = ValidationRunner([Unique("u")], n_buckets=4)
+    _, plan = _flag_plan(spark, runner, fact)
+    parts = [part for part, _, _ in _exchanges(plan)]
+    assert len(parts) == 1, parts
+    assert re.fullmatch(r"hashpartitioning\(conv_id#\d+, \d+\)", parts[0]), parts
+    assert "Window" in plan.toString()
+
+    res = runner.run(fact)
+    nodes = list(_plan_nodes(spark, res.violations, res.verdicts))
+    scans = [n for n in nodes if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert len(scans) == 1
+    keyed = [
+        n.simpleString(100) for n in nodes
+        if n.nodeName() == "HashAggregate"
+        and re.search(r"keys=\[[^\]]*\b(conv_id|turn_idx)#", n.simpleString(100))
+    ]
+    assert not keyed, keyed
     got = sorted(
         (r["conv_id"], r["turn_idx"], r["detail"]) for r in res.violations.collect()
     )

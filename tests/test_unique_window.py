@@ -1,8 +1,8 @@
-"""Unique as a window flag: on a clustered frame a Unique key that
-contains conv_id is counted by a window over the conversation. Its
-violation rows must equal an independent pandas ``groupby`` oracle and
-the salted two-phase aggregate of an unclustered run of the same check,
-on inputs with null keys and one key duplicated 10,000 times."""
+"""Unique as a window flag: a Unique key must contain conv_id and is
+counted by a window over the conversation. Its violation rows must
+equal an independent pandas ``groupby`` oracle, both inside a suite
+that clusters for other checks and in a suite of the check alone, on
+inputs with null keys and one key duplicated 10,000 times."""
 
 from __future__ import annotations
 
@@ -54,9 +54,7 @@ def _oracle(fact, chk: Unique) -> list[tuple]:
     return _rows(g)
 
 
-def _unique_rows(runner: ValidationRunner, fact, chk: Unique, windowed: bool) -> list[tuple]:
-    plan = runner._flagged(fact)
-    assert (chk in [c for c, _ in plan.flags]) == windowed
+def _unique_rows(runner: ValidationRunner, fact, chk: Unique) -> list[tuple]:
     res = runner.run(fact)
     try:
         return _rows(res.violations.filter(F.col("check_id") == chk.name).toPandas())
@@ -64,12 +62,12 @@ def _unique_rows(runner: ValidationRunner, fact, chk: Unique, windowed: bool) ->
         res.unpersist()
 
 
-def _assert_window_equals_oracle_and_salted(fact, suite, chk, dims=None) -> list[tuple]:
+def _assert_suite_and_alone_equal_oracle(fact, suite, chk, dims=None) -> list[tuple]:
     want = _oracle(fact, chk)
-    window = _unique_rows(ValidationRunner(suite, n_buckets=N_BUCKETS, dims=dims), fact, chk, True)
-    salted = _unique_rows(ValidationRunner([chk], n_buckets=N_BUCKETS), fact, chk, False)
-    assert window == want
-    assert salted == want
+    in_suite = _unique_rows(ValidationRunner(suite, n_buckets=N_BUCKETS, dims=dims), fact, chk)
+    alone = _unique_rows(ValidationRunner([chk], n_buckets=N_BUCKETS), fact, chk)
+    assert in_suite == want
+    assert alone == want
     assert want
     return want
 
@@ -107,13 +105,13 @@ def test_default_suite_unique(corrupted):
     fact, dims = corrupted
     suite = default_transcript_checks()
     (chk,) = [c for c in suite if isinstance(c, Unique)]
-    _assert_window_equals_oracle_and_salted(fact, suite, chk, dims)
+    _assert_suite_and_alone_equal_oracle(fact, suite, chk, dims)
 
 
 def test_key_without_turn_idx(corrupted):
     fact, _ = corrupted
     chk = Unique("unique_role", columns=("conv_id", "role"))
-    want = _assert_window_equals_oracle_and_salted(
+    want = _assert_suite_and_alone_equal_oracle(
         fact, [chk, MonotonicOrder("turn_order")], chk
     )
     assert all(r[COLS.index("turn_idx")] is None for r in want)
@@ -130,9 +128,21 @@ def test_null_keys_and_hot_key(adversarial, chk):
         Unique("unique_role", columns=("conv_id", "role")),
         MonotonicOrder("turn_order"),
     ]
-    want = _assert_window_equals_oracle_and_salted(adversarial, suite, chk)
+    want = _assert_suite_and_alone_equal_oracle(adversarial, suite, chk)
     hot = [r for r in want if r[COLS.index("conv_id")] == "conv_hot"]
     assert len(hot) == 1
     if chk.name == "unique_turn":
         assert hot[0][-1] == "duplicate key count=10000"
         assert any(r[2] is None for r in want) and any(r[3] is None for r in want)
+
+
+def test_key_without_conv_id_raises(spark):
+    """A key without conv_id can repeat across part_ids, where no window
+    over a conversation sees both rows: the runner refuses it instead
+    of reporting no duplicates."""
+    fact = spark.createDataFrame(
+        [(f"c{i}", 0, "same text") for i in range(3)], "conv_id string, turn_idx int, text string"
+    )
+    assert fact.select(part_id_expr(n_buckets=N_BUCKETS)).distinct().count() > 1
+    with pytest.raises(ValueError, match="unique_text.*lacks conv_id"):
+        ValidationRunner([Unique("unique_text", columns=("text",))], n_buckets=N_BUCKETS)
