@@ -44,7 +44,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(HOST_CPUS)))
 N_CONVS = int(os.environ.get("BENCH_CONVS", "250000"))
 # repetitions per query; medians are reported (this host's cycle budget
 # drifts between trials — single-shot numbers conflate plan changes
-# with host noise, see BENCH/BASELINE.md)
+# with host noise, see BENCH/SCALING.md)
 REPS = max(1, int(os.environ.get("BENCH_REPS", "3")))
 # the headline validation_full number gets MORE reps plus one discarded
 # warm-up: the r4 record showed a 34% "regression" that a warm re-run

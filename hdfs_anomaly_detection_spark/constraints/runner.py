@@ -219,24 +219,11 @@ class ValidationRunner:
         baselines: dict[str, pd.DataFrame] | None = None,
         part_col: str | None = None,
         carry_cols: tuple[str, ...] = (),
-        pre_clustered: bool = False,
     ) -> None:
         """``part_col``: use an existing int column as the partition id
         (e.g. an Iceberg partition column) instead of the default
         ``pmod(xxhash64(conv_id), n_buckets)``. Must be functionally
         dependent on conv_id so verdicts stay conversation-aligned.
-
-        ``pre_clustered``: the input table is ALREADY hash-distributed
-        by conv_id — a bucketed table (``sources/bucketed``,
-        read via ``spark.table`` so the bucket spec survives) or an
-        Iceberg ``bucket(N, conv_id)`` layout. The runner then skips
-        its own repartition and the scan's bucket partitioning carries
-        the whole plan: at 10^12 turns this moves the engine's one
-        remaining full-frame exchange (~50 B/row × rows per run) into
-        storage, amortized across every subsequent validation of the
-        same table. Safe degradation: if the input is NOT actually
-        bucketed, EnsureRequirements simply re-inserts the exchanges —
-        same results, the old cost.
 
         Every check's ``Column`` expressions are built here, once, so a
         runner needs an active Spark session, and ``dims`` must hold
@@ -264,7 +251,6 @@ class ValidationRunner:
         # (e.g. the streaming watermark needs ts); every extra column
         # multiplies across all downstream exchanges, so opt-in only
         self.carry_cols = tuple(carry_cols)
-        self.pre_clustered = pre_clustered
         self._compiled = self._compile()
 
     def pid_expr(self) -> F.Column:
@@ -570,9 +556,10 @@ class ValidationRunner:
         # spark.sql.requireAllClusterKeysForCoPartition=false, set ONCE in
         # session.get_spark (not here — mutating session conf mid-plan
         # would leak into unrelated queries on a shared session)
-        if not self.pre_clustered:
-            n_shuffle = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-            df = df.repartition(n_shuffle, "conv_id")
+        # Over a bucketBy(n_shuffle, conv_id) table the planner drops this
+        # repartition: the scan's bucketing already satisfies it
+        n_shuffle = int(fact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(n_shuffle, "conv_id")
         if c.outer:
             # after the exchange, so the aliases do not widen the shuffle
             df = df.select("*", *c.outer)

@@ -94,14 +94,3 @@ def length_histogram(
         .groupBy(*(group_by or []), bucket)
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def numeric_histogram(
-    df: DataFrame, column: str, bin_width: float, group_by: list[str] | None = None
-) -> DataFrame:
-    bucket = (F.floor(F.col(column) / bin_width) * bin_width).alias("bucket_lo")
-    return (
-        df.filter(F.col(column).isNotNull())
-        .groupBy(*(group_by or []), bucket)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )

@@ -6,7 +6,6 @@ from hdfs_anomaly_detection_spark.streaming.validate_stream import (  # noqa: F4
     foreach_batch_validator,
     kafka_sink_writer,
     kafka_stream_reader,
-    kafka_transcript_stream,
     stream_checks,
     streaming_violations,
     windowed_violation_counts,

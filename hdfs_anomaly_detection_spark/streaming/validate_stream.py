@@ -175,16 +175,6 @@ def flatten_kafka_value(
     )
 
 
-def kafka_transcript_stream(
-    spark, brokers: str, topic: str, value_ddl: str = TRANSCRIPT_VALUE_DDL, **reader_kwargs
-) -> DataFrame:
-    """End-to-end kafka source: configured reader → load → flatten.
-    The returned unbounded frame feeds ``streaming_violations`` /
-    ``windowed_violation_counts`` exactly like the file stream."""
-    raw = kafka_stream_reader(spark, brokers, topic, **reader_kwargs).load()
-    return flatten_kafka_value(raw, value_ddl)
-
-
 def kafka_sink_writer(df: DataFrame, brokers: str, topic: str, checkpoint: str):
     """Configured kafka-format ``writeStream`` (call ``.start()`` on it):
     rows serialized to JSON in ``value``, keyed by conv_id — the

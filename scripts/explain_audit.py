@@ -238,7 +238,7 @@ by the unchanged `d_simhash_pairs` oracle).
 
 Measured on 10,003 synthetic ~300-char docs (42 tokens/doc, 3,000-word
 vocabulary), warmed, alternating runs, medians of 3 (this host needs
-medians — see BENCH/BASELINE.md):
+medians — see BENCH/SCALING.md):
 
 | variant | median | speedup |
 |---|---|---|

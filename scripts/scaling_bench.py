@@ -25,7 +25,9 @@ cluster):
   one tight window, producing one paired efficiency sample; the
   reported numbers are medians over ``TRIALS`` such samples.
 
-Usage: PYTHONPATH=/root/repo python3 scripts/scaling_bench.py [n_convs]
+Writes BENCH/SCALING.md (and nothing else under BENCH/).
+
+Usage: PYTHONPATH=. python3 scripts/scaling_bench.py [n_convs]
        python3 scripts/scaling_bench.py --level N <cache> [--control]
 """
 
@@ -33,6 +35,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -43,16 +46,6 @@ sys.path.insert(0, REPO)
 _NPROC = len(os.sched_getaffinity(0))
 LEVELS = (max(1, _NPROC // 2), _NPROC)
 TRIALS = int(os.environ.get("SCALING_TRIALS", "3"))
-# r4/r5 operators also get paired N-vs-4N evidence: each runs as an
-# OPERATOR KERNEL over the cached multi-million-row fact table (the
-# sf0.1 driver queries finish in <1 s — far too small to exhibit
-# scaling; the kernel keeps the operator's exact plan shape at a size
-# where the exchange/window/sketch stages dominate)
-OPS = [o for o in os.environ.get(
-    "SCALING_OPS", "asof_join,interval_join,heavy_hitters"
-).split(",") if o and o != "none"]
-OPS_TRIALS = int(os.environ.get("SCALING_OPS_TRIALS", "1"))
-
 BENCH_CONF = {
     # finer input splits → multiple task waves → straggler smoothing
     "spark.sql.files.maxPartitionBytes": "8m",
@@ -113,69 +106,6 @@ def run_level(cpus: int, cache: str, control: bool) -> None:
     spark.stop()
 
 
-def run_op(cpus: int, cache: str, op: str) -> None:
-    """One operator kernel over the cached fact table, timed after a
-    discarded warm-up run inside the same JVM (boot/JIT excluded)."""
-    from pyspark.sql import functions as F
-
-    spark = _spark(cpus, f"scaling-{op}-{cpus}")
-    fact = spark.read.parquet(f"{cache}/fact")
-    n = fact.count()
-    h = F.xxhash64("conv_id", "turn_idx")
-
-    def build():
-        if op == "asof_join":
-            # left = every turn, right = every 5th turn: the UNION +
-            # (key, ts) exchange + ordered sweep at |fact| scale
-            from hdfs_anomaly_detection_spark.operators import asof_join
-
-            left = fact.select("conv_id", "ts", "turn_idx")
-            right = fact.filter(F.pmod(h, F.lit(5)) == 0).select(
-                "conv_id", F.col("ts").alias("rts"), F.col("turn_idx").alias("r_turn")
-            )
-            return asof_join(
-                left, right, on=["conv_id"], ts="ts", right_ts="rts",
-                tiebreak="r_turn",
-            )
-        if op == "interval_join":
-            # hashed point values vs 2000 half-overlapping bands: the
-            # binned-rewrite explode + equi-shuffle + exact recheck
-            from hdfs_anomaly_detection_spark.operators import interval_join
-
-            pts = fact.select(
-                "conv_id", (F.pmod(h, F.lit(1_000_000))).cast("double").alias("v")
-            )
-            iv = spark.range(2000).select(
-                F.col("id").alias("band_id"),
-                (F.col("id") * 500.0).alias("lo"),
-                (F.col("id") * 500.0 + 1000.0).alias("hi"),
-            )
-            return interval_join(pts, iv, point_col="v", bin_size=500.0)
-        if op == "heavy_hitters":
-            # 7 planted hot keys over an otherwise ~unique key space:
-            # sketch pass + constant-folded admission + exact verify
-            from hdfs_anomaly_detection_spark.sketch import heavy_hitters
-
-            keyed = fact.select(
-                F.when(
-                    F.pmod(h, F.lit(10)) == 0,
-                    F.concat(F.lit("hot_"), F.pmod(h, F.lit(7)).cast("string")),
-                )
-                .otherwise(F.col("conv_id"))
-                .alias("k")
-            )
-            return heavy_hitters(keyed, "k", threshold=max(1000, n // 200))
-        raise ValueError(f"unknown scaling op {op!r}")
-
-    build().count()  # warm-up: JIT, codegen, page cache
-    t0 = time.time()
-    out_n = build().count()
-    elapsed = time.time() - t0
-    print(json.dumps({"cpus": cpus, "elapsed": elapsed, "rows": n,
-                      "out_rows": out_n, "kind": "op", "op": op}))
-    spark.stop()
-
-
 def _gen_cache(n_convs: int, cache: str) -> None:
     from hdfs_anomaly_detection_spark.constraints import TextEquals
     from hdfs_anomaly_detection_spark.constraints.runner import reference_hashes
@@ -212,15 +142,12 @@ def _gen_cache(n_convs: int, cache: str) -> None:
     spark.stop()
 
 
-def _run_sub(cpus: int, cache: str, control: bool = False, op: str | None = None) -> dict:
+def _run_sub(cpus: int, cache: str, control: bool = False) -> dict:
     args = ["taskset", "-c", f"0-{cpus - 1}", sys.executable,
             os.path.abspath(__file__), "--level", str(cpus), cache]
     if control:
         args.append("--control")
-    if op:
-        args += ["--op", op]
-    env = {**os.environ, "PYTHONPATH": REPO,
-           "SPARK_DRIVER_MEM": os.environ.get("SPARK_DRIVER_MEM", "48g")}
+    env = {**os.environ, "PYTHONPATH": REPO}
     out = subprocess.run(args, capture_output=True, text=True, env=env, timeout=3600)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or not lines:
@@ -234,10 +161,6 @@ def _run_sub(cpus: int, cache: str, control: bool = False, op: str | None = None
 def main() -> None:
     if "--level" in sys.argv:
         i = sys.argv.index("--level")
-        if "--op" in sys.argv:
-            j = sys.argv.index("--op")
-            run_op(int(sys.argv[i + 1]), sys.argv[i + 2], sys.argv[j + 1])
-            return
         run_level(int(sys.argv[i + 1]), sys.argv[i + 2], "--control" in sys.argv)
         return
 
@@ -280,67 +203,8 @@ def main() -> None:
                           "ceff": round(ceff_t, 3),
                           "norm": round(trials[-1]["norm"], 3)}))
 
-    # per-operator paired windows (r5): each window runs ctl@lo, ctl@hi,
-    # then every op at lo and hi back-to-back — one normalized-efficiency
-    # sample per op per window, medians across OPS_TRIALS windows
-    import statistics
-
-    op_samples: dict[str, list[dict]] = {op: [] for op in OPS}
-    for _ in range(OPS_TRIALS):
-        if not OPS:
-            break
-        cl = _run_sub(lo, cache, control=True)
-        ch = _run_sub(hi, cache, control=True)
-        ceff_w = (cl["elapsed"] / ch["elapsed"]) / (hi / lo)
-        for op in OPS:
-            ol = _run_sub(lo, cache, op=op)
-            oh = _run_sub(hi, cache, op=op)
-            eff = (ol["elapsed"] / oh["elapsed"]) / (hi / lo)
-            sample = {
-                "lo": ol, "hi": oh, "eff": eff, "ceff": ceff_w,
-                "norm": eff / ceff_w if ceff_w > 0 else float("nan"),
-            }
-            op_samples[op].append(sample)
-            for r in (ol, oh):
-                print(json.dumps(r))  # run_op already tags "op"
-            print(json.dumps({"op": op, "eff": round(eff, 3),
-                              "ceff": round(ceff_w, 3),
-                              "norm": round(sample["norm"], 3)}))
-
     med = lambda k: statistics.median(tr[k] for tr in trials)  # noqa: E731
     jeff, ceff, norm = med("eff"), med("ceff"), med("norm")
-    ops_md = ""
-    if OPS and all(op_samples[op] for op in OPS):
-        lines = [
-            "",
-            "## Per-operator scaling (r4/r5 operators, paired windows)",
-            "",
-            "Operator kernels over the same cached fact table (the sf0.1",
-            "driver queries finish in <1 s — too small to exhibit scaling;",
-            "each kernel keeps the operator's exact plan shape: asof = union",
-            "+ keyed exchange + ordered sweep, interval = binned explode +",
-            f"equi-shuffle + recheck, heavy_hitters = sketch + admission +",
-            f"exact verify). {OPS_TRIALS} paired window(s), run back-to-back",
-            "with the hardware control; normalized = op_eff / that window's",
-            "control_eff (same convention as the headline job); walls are",
-            "per-level medians across windows. Sub-second kernels (asof's",
-            "sweep is ~0.6 s here) are dominated by per-stage fixed",
-            "overhead, which compresses their measured efficiency — treat",
-            "those rows as lower bounds.",
-            "",
-            f"| operator kernel | wall@{lo} s | wall@{hi} s | raw eff | normalized |",
-            "|---|---|---|---|---|",
-        ]
-        for op in OPS:
-            ss = op_samples[op]
-            m = statistics.median(s["norm"] for s in ss)
-            lines.append(
-                f"| {op} | "
-                f"{statistics.median(s['lo']['elapsed'] for s in ss):.2f} | "
-                f"{statistics.median(s['hi']['elapsed'] for s in ss):.2f} | "
-                f"{statistics.median(s['eff'] for s in ss):.3f} | {m:.3f} |"
-            )
-        ops_md = "\n".join(lines) + "\n"
     # wall-time tables: per-level MEDIANS across trials (a single
     # representative window can land on a throttled budget sample and
     # show hi slower than lo in absolute terms; efficiencies stay
@@ -352,12 +216,10 @@ def main() -> None:
     rows = trials[0]["job"][lo]["rows"]
     jthr = {c: rows / jwall[c] for c in LEVELS}
     cthr = {c: rows / cwall[c] for c in LEVELS}
-    job = {c: {"elapsed": jwall[c]} for c in LEVELS}
-    ctl = {c: {"elapsed": cwall[c]} for c in LEVELS}
     violations = trials[0]["job"][lo]["violations"]
     violations_hi = trials[0]["job"][hi]["violations"]
     os.makedirs(f"{REPO}/BENCH", exist_ok=True)
-    with open(f"{REPO}/BENCH/BASELINE.md", "w") as f:
+    with open(f"{REPO}/BENCH/SCALING.md", "w") as f:
         f.write(f"""# BENCH — Two-parallelism scaling evidence (north_rule criterion)
 
 Identical full-constraint validation job (null/domain/range checks,
@@ -374,8 +236,8 @@ across trials and the efficiencies are medians of the per-trial
 
 | parallelism | wall sec | validated turns/sec |
 |---|---|---|
-| local[{lo}] | {job[lo]["elapsed"]:.2f} | {jthr[lo]:,.0f} |
-| local[{hi}] | {job[hi]["elapsed"]:.2f} | {jthr[hi]:,.0f} |
+| local[{lo}] | {jwall[lo]:.2f} | {jthr[lo]:,.0f} |
+| local[{hi}] | {jwall[hi]:.2f} | {jthr[hi]:,.0f} |
 
 **Raw scaling efficiency** (thr@{hi}/thr@{lo})/({hi}/{lo}), median of
 {TRIALS} paired trials = **{jeff:.3f}**
@@ -390,13 +252,13 @@ no shuffle, no join, no window, perfectly parallel:
 
 | parallelism | wall sec | rows/sec |
 |---|---|---|
-| local[{lo}] | {ctl[lo]["elapsed"]:.2f} | {cthr[lo]:,.0f} |
-| local[{hi}] | {ctl[hi]["elapsed"]:.2f} | {cthr[hi]:,.0f} |
+| local[{lo}] | {cwall[lo]:.2f} | {cthr[lo]:,.0f} |
+| local[{hi}] | {cwall[hi]:.2f} | {cthr[hi]:,.0f} |
 
 Control efficiency (median of paired trials) = **{ceff:.3f}** — when
 this is far below 1.0 the
 control's absolute throughput at {hi} busy cores is not much higher
-than at {lo}: this sandbox VM caps the **aggregate** CPU cycles it
+than at {lo}: the host caps the **aggregate** CPU cycles it
 grants (verified Spark-free with a pure-Python sha256 pool; steal%=0,
 so it is a host cycle budget, not our code). No job of any kind can
 demonstrate raw {hi // lo}x wall-clock scaling on a box that does not
@@ -417,54 +279,26 @@ Values above 1.0 mean the job happened to scale better than the control
 in that window (both are noisy samples of the same drifting budget); the
 honest reading is "normalized efficiency ~ 1.0": the plan adds no
 scaling bottleneck beyond the hardware's own ceiling.
-{ops_md}
-## Cross-round comparison (host-budget drift evidence)
-
-Same job, same cached input, identical violation count across rounds —
-only the sandbox's granted cycle budget changed:
-
-| round | raw eff | control eff | normalized |
-|---|---|---|---|
-| r2 (5 trials) | 0.427 | 0.488 | **0.862** |
-| r3 (5 trials) | 0.301 | 0.265 | **1.168** |
-| r4 (5 trials) | 0.252 | 0.322 | **0.921** |
-| r5 ({TRIALS} trials) | {jeff:.3f} | {ceff:.3f} | **{norm:.3f}** |
-
-The host's absolute budget keeps shrinking round over round (the
-validation job's local[{hi}] throughput fell 135k → 92k turns/sec r2→r4
-on IDENTICAL code+input; the shuffle-free control kernel fell in step),
-and per-trial spread within a round spans ~0.4–1.3 normalized — the
-budget drifts on the minutes scale too. Through all of it the
-control-NORMALIZED ratio holds at ≈0.86–1.17 around 1.0: the
-validation plan scales as well as the hardware allows, with no
-plan-induced bottleneck, which is the property that transfers to a
-real N→4N executor cluster (where the control is ~1.0 and raw ≈
-normalized ≥ 0.8 per north_rule).
 
 Plan-shape notes (why the job tracks the control):
 * ONE hash(conv_id) exchange of a narrow pre-flagged frame serves the
-  reference-equality SMJ, the conversations-dim SMJ, the ordering
-  window, the uniqueness counts, the per-partition row counts, the
-  drift-metric digests and the freshness max-ts aggregates
-  (subset co-partitioning; the window reuses the SMJ sort) — the fact
+  reference and conversations-dim existence joins (the tools dim is
+  broadcast), the ordering window and the uniqueness window; the fact
   table is scanned exactly once per run.
-* Text payloads enter one shuffle only: TextEquals carries the raw text
-  and its xxhash64 through the fact-side hash(conv_id) exchange, and only
-  rows whose raw hash differs from the reference's are canonicalized,
-  above the reference SMJ; without TextEquals exchanges move ~50 B/row.
+* Text enters that one exchange only when TextEquals runs: the raw text
+  and its xxhash64 ride it, and only rows whose raw hash differs from
+  the reference's are canonicalized; without TextEquals the exchange
+  moves ~50 B/row.
 * Reference canonical and raw hashes are precomputed once (static
   corpus), not re-canonicalized per run.
+* Verdicts are one groupBy(part_id) over the persisted flagged frame.
 
 Reproduce: `PYTHONPATH=. python3 scripts/scaling_bench.py {n_convs}`
 """)
     print(json.dumps({"efficiency_raw": round(jeff, 3),
                       "efficiency_control": round(ceff, 3),
                       "efficiency_normalized": round(norm, 3),
-                      "throughput": {str(k): round(v, 1) for k, v in jthr.items()},
-                      "op_efficiency_normalized": {
-                          op: round(statistics.median(s["norm"] for s in ss), 3)
-                          for op, ss in op_samples.items() if ss
-                      }}))
+                      "throughput": {str(k): round(v, 1) for k, v in jthr.items()}}))
 
 
 if __name__ == "__main__":

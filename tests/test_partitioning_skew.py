@@ -1,15 +1,11 @@
-"""Skew handling: a hot uniqueness key across many input splits, hot-key
-detection, and size-aware repartitioning."""
+"""Skew handling: a hot uniqueness key across many input splits, and a
+hot LSH band bucket split by AQE's skew-join handling."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from hdfs_anomaly_detection_spark.constraints import Unique, ValidationRunner
-from hdfs_anomaly_detection_spark.plans.partitioning import (
-    hot_conversations,
-    turn_count_aware_repartition,
-)
 
 
 def test_unique_counts_hot_key_exactly(spark):
@@ -30,27 +26,6 @@ def test_unique_counts_hot_key_exactly(spark):
     assert len(viol) == 1
     assert viol.iloc[0]["conv_id"] == "conv_hot"
     assert viol.iloc[0]["detail"] == "duplicate key count=10000"
-
-
-def test_hot_conversation_detection(spark):
-    hot = spark.range(50_000).select(F.lit("conv_hot").alias("conv_id"))
-    cold = spark.range(10_000).select(
-        F.format_string("conv_%d", F.pmod(F.col("id"), F.lit(500))).alias("conv_id")
-    )
-    df = hot.unionByName(cold)
-    found = hot_conversations(df, threshold_rows=20_000, sample_fraction=0.1).toPandas()
-    assert "conv_hot" in set(found["conv_id"])
-    assert len(found) == 1
-
-
-def test_turn_count_aware_repartition(spark):
-    df = spark.range(100_000).select(
-        F.format_string("conv_%d", F.pmod(F.col("id"), F.lit(997))).alias("conv_id"),
-        F.col("id").alias("turn_idx"),
-    )
-    out = turn_count_aware_repartition(df, target_rows_per_task=10_000, sample_fraction=0.2)
-    n = out.rdd.getNumPartitions()
-    assert 8 <= n <= 16  # ~100k/10k = 10, clamped at min 8
 
 
 def test_lsh_hot_band_aqe_skew_split(spark):
